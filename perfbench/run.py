@@ -140,6 +140,7 @@ def check_outputs(spark, wl, n_iter: int, seed: int, n_pages: int) -> dict:
     """Run every output check; returns the reference frame, problems per
     iteration and run-wide, and the checksums."""
     with job_group(spark, "check"):
+        wl.collect_checked()
         reference = wl.reference
         expected = checks.oracle_pairs(reference, checks.region_table())
         ref_tiles = list(zip(reference["url"], *(reference[c] for c in TILE_COLS)))

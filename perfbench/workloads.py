@@ -72,7 +72,7 @@ class Workload:
     # write label -> plan markers each timed write must carry (checks.MARKERS)
     required_markers: dict = {}
     writes_per_iteration: dict = {}
-    reference = None  # pandas frame of REFERENCE_COLS, made by warm_up
+    reference = None  # pandas frame of REFERENCE_COLS, for the checks
 
     def __init__(self, spark: SparkSession, work_dir: str):
         self.spark = spark
@@ -100,6 +100,9 @@ class Workload:
     def warm_up(self, pages: DataFrame, plan) -> None:
         """Run the path once, untimed, so the timed iterations start warm."""
         raise NotImplementedError
+
+    def collect_checked(self) -> None:
+        """Collect what the checks compare that timing did not keep."""
 
     def prepare(self, pages: DataFrame, plan) -> None:
         """Hold what the timed iterations reuse."""
@@ -129,29 +132,29 @@ class JoinBroadcast(Workload):
     }
     writes_per_iteration = {"enriched": 1, "joined": 1}
 
-    def frames(self, pages=None, plan=None):
+    def warm_up(self, pages, plan):
+        """Build both outputs once (every timed iteration writes these same
+        frames: each write plans and runs the whole query again) and write
+        them to noop once."""
         from spatial.pipeline import enrich_pages
 
-        enriched = enrich_pages(self.pages_df if pages is None else pages, ZOOM)
-        return enriched, self.join(self.plan if plan is None else plan, enriched)
+        self.enriched = enrich_pages(pages, ZOOM)
+        self.joined_df = self.join(plan, self.enriched)
+        noop(self.enriched)
+        noop(self.joined_df)
 
-    def warm_up(self, pages, plan):
-        """One whole iteration written to noop, then the check pass: both
-        outputs again, collected for the checks (noop writes keep nothing
-        to compare, and the iterations are deterministic). Two passes leave
-        the timed iterations measurably steadier than one."""
-        enriched, joined = self.frames(pages, plan)
-        noop(enriched)
-        noop(joined)
-        self.reference = enriched.select(*REFERENCE_COLS).toPandas()
-        self.joined = joined.select("url", "region_id", *TILE_COLS).toPandas()
+    def collect_checked(self):
+        """After timing: both outputs collected for the checks (noop writes
+        keep nothing to compare, and the iterations are deterministic)."""
+        self.reference = self.enriched.select(*REFERENCE_COLS).toPandas()
+        self.joined = self.joined_df.select(
+            "url", "region_id", *TILE_COLS).toPandas()
 
     def iteration(self, i: int) -> None:
-        enriched, joined = self.frames()
         with job_group(self.spark, timed_group(i), "enriched"):
-            noop(enriched)
+            noop(self.enriched)
         with job_group(self.spark, timed_group(i), "joined"):
-            noop(joined)
+            noop(self.joined_df)
 
     def write_label(self, description, plan):
         return description if description in self.writes_per_iteration else None
