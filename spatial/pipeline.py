@@ -19,26 +19,44 @@ Checkpoint/resume semantics:
   Because extract_text/geocode are bytewise-deterministic per url, a resumed
   run's union of outputs is byte-identical to an uninterrupted run's.
 
+One pass per batch: the batch is enriched once and joined once. Both
+results are persisted (the enrichment without ``text``, which nothing
+downstream reads), every sink write reads them, and both are released when
+the batch commits or fails.
+
 Per-partition lineage/metrics: each committed batch also writes a metrics
-table (batch, spark partition id, rows in/out per stage) via
-``groupBy(spark_partition_id())`` -- cheap, no extra shuffle.
+table of ``join_out`` (batch, spark partition id, ``rows_out``,
+``urls_out``) via ``groupBy(spark_partition_id())`` -- cheap, no extra
+shuffle.
+
+Batch counters live in the manifest JSON, observed on the sink writes
+themselves (``DataFrame.observe``), so no output is read back to count it:
+``join_rows``, ``tile_rows``, ``tile_rows_by_source`` (coords / city /
+cctld geocodes) and ``hot_cells`` (size of the plan's salted hot-cell set,
+0 on a broadcast plan).
 """
 
 from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .ewkb import ewkb_decode
 from .geocode import geocode_page
-from .join import SpatialJoinPlan
+from .join import SpatialJoinPlan, cluster_by_cell
 from .textextract import extract_text
 from .tiles import tile_assign
+
+# what the join and the sinks read of an enriched batch: the cached frame
+# leaves out text, the large column
+ENRICHED_COLS = ("url", "lon", "lat", "geo_source", "tile_z", "tile_x", "tile_y")
+GEO_SOURCES = ("coords", "city", "cctld")
 
 
 @dataclass
@@ -99,6 +117,62 @@ def enrich_pages(pages: DataFrame, zoom: int) -> DataFrame:
     return tile_assign(located, "lon", "lat", zoom)
 
 
+@contextmanager
+def _persisted(df: DataFrame):
+    """Persist ``df`` for the block and release its blocks on exit, also
+    when the block fails."""
+    cached = df.persist()
+    try:
+        yield cached
+    finally:
+        cached.unpersist()
+
+
+def _write(df: DataFrame, out_dir: str, table: str, batch: int) -> None:
+    df.write.mode("overwrite").parquet(
+        os.path.join(out_dir, table, f"batch={batch}"))
+
+
+def _run_batch(plan: SpatialJoinPlan, batch_pages: DataFrame,
+               cfg: PipelineConfig, batch: int) -> None:
+    """Enrich and join one batch once, write its three sinks from those two
+    cached frames, and commit the counts observed on the writes."""
+    with _persisted(enrich_pages(batch_pages, cfg.zoom)
+                    .select(*ENRICHED_COLS)) as enriched:
+        joined = plan.join(enriched, x_col="lon", y_col="lat", salt_key="url")
+        join_out = joined.select(
+            "url", "region_id", "cell", F.col("lon").alias("x"), F.col("lat").alias("y"))
+        if cfg.cluster_cells > 0:
+            join_out = cluster_by_cell(join_out, "cell", cfg.cluster_cells)
+        with _persisted(join_out) as join_out:
+            join_obs = Observation(f"join_out-{batch}")
+            _write(join_out.observe(join_obs, F.count(F.lit(1)).alias("rows")),
+                   cfg.out_dir, "join_out", batch)
+            tile_obs = Observation(f"tile_assign-{batch}")
+            by_source = [F.count_if(F.col("geo_source") == s).alias(s)
+                         for s in GEO_SOURCES]
+            _write(enriched.observe(tile_obs, F.count(F.lit(1)).alias("rows"),
+                                    *by_source)
+                   .select("url", "tile_z", "tile_x", "tile_y"),
+                   cfg.out_dir, "tile_assign", batch)
+            # per-partition lineage counters (groupBy partition id: map-side agg)
+            metrics = (
+                join_out.groupBy(F.spark_partition_id().alias("partition_id"))
+                .agg(F.count("*").alias("rows_out"),
+                     F.approx_count_distinct("url").alias("urls_out"))
+                .withColumn("batch", F.lit(batch))
+            )
+            _write(metrics, cfg.out_dir, "metrics", batch)
+            tiles = tile_obs.get
+            _commit_batch(cfg.out_dir, batch, {
+                "join_rows": join_obs.get["rows"],
+                "tile_rows": tiles["rows"],
+                "tile_rows_by_source": {s: tiles[s] for s in GEO_SOURCES},
+                # the set the plan detected on this call's first salted join
+                "hot_cells": len(plan._hot_cache or []),
+            })
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -120,46 +194,20 @@ def run_pipeline(
     )
     done = committed_batches(cfg.out_dir)
     ran = []
-    for batch in range(cfg.n_batches):
-        if batch in done:
-            continue
-        # deterministic batch membership: stable across runs & cluster sizes
-        batch_pages = pages.where(
-            F.pmod(F.xxhash64("url"), F.lit(cfg.n_batches)) == batch
-        )
-        enriched = enrich_pages(batch_pages, cfg.zoom)
-        joined = plan.join(enriched, x_col="lon", y_col="lat", salt_key="url")
-        join_out = joined.select(
-            "url", "region_id", "cell", F.col("lon").alias("x"), F.col("lat").alias("y")
-        )
-        tiles_out = enriched.select("url", "tile_z", "tile_x", "tile_y")
-
-        if cfg.cluster_cells > 0:
-            from .join import cluster_by_cell
-            join_out = cluster_by_cell(join_out, "cell", cfg.cluster_cells)
-        join_out.write.mode("overwrite").parquet(
-            os.path.join(cfg.out_dir, "join_out", f"batch={batch}"))
-        tiles_out.write.mode("overwrite").parquet(
-            os.path.join(cfg.out_dir, "tile_assign", f"batch={batch}"))
-
-        # per-partition lineage counters (groupBy partition id: map-side agg)
-        metrics = (
-            join_out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows_out"),
-                 F.approx_count_distinct("url").alias("urls_out"))
-            .withColumn("batch", F.lit(batch))
-        )
-        metrics.write.mode("overwrite").parquet(
-            os.path.join(cfg.out_dir, "metrics", f"batch={batch}"))
-
-        n_join = spark.read.parquet(
-            os.path.join(cfg.out_dir, "join_out", f"batch={batch}")).count()
-        n_tiles = spark.read.parquet(
-            os.path.join(cfg.out_dir, "tile_assign", f"batch={batch}")).count()
-        _commit_batch(cfg.out_dir, batch, {"join_rows": n_join, "tile_rows": n_tiles})
-        ran.append(batch)
-        if fail_after_batch is not None and batch >= fail_after_batch:
-            raise RuntimeError(f"simulated failure after batch {batch}")
+    try:
+        for batch in range(cfg.n_batches):
+            if batch in done:
+                continue
+            # deterministic batch membership: stable across runs & cluster sizes
+            batch_pages = pages.where(
+                F.pmod(F.xxhash64("url"), F.lit(cfg.n_batches)) == batch
+            )
+            _run_batch(plan, batch_pages, cfg, batch)
+            ran.append(batch)
+            if fail_after_batch is not None and batch >= fail_after_batch:
+                raise RuntimeError(f"simulated failure after batch {batch}")
+    finally:
+        plan.unpersist()
     return {"ran_batches": ran, "committed": sorted(committed_batches(cfg.out_dir))}
 
 

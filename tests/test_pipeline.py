@@ -2,6 +2,7 @@
 byte-identity (FIXTURES.md §5, BASELINE.json input_hint invariants)."""
 
 import hashlib
+import json
 import os
 
 import pytest
@@ -34,11 +35,37 @@ def test_extract_text_golden_pin():
     assert extract_text_py(b"<p>a\xffb</p>") == "a�b"
 
 
+JOIN_COLS = ["url", "region_id", "x", "y"]
+TILE_COLS = ["url", "tile_z", "tile_x", "tile_y"]
+
+# uninterrupted runs the read-only tests share
+RUN_CONFIGS = {
+    "plain": {},
+    "clustered": {"cluster_cells": 4},
+    "salted": {"broadcast_threshold": 0, "salt_buckets": 8},
+}
+
+
 def _run(spark, tmp, **kw):
     pages = synth_pages(spark, N_PAGES)
     regions = synth_regions(spark)
     cfg = PipelineConfig(out_dir=str(tmp), **kw)
     return run_pipeline(spark, pages, regions, cfg)
+
+
+@pytest.fixture(scope="module")
+def finished_run(spark, tmp_path_factory):
+    """``finished_run(name)``: output dir of one uninterrupted run of
+    ``RUN_CONFIGS[name]``, run on first use."""
+    dirs = {}
+
+    def get(name):
+        if name not in dirs:
+            dirs[name] = tmp_path_factory.mktemp(name)
+            res = _run(spark, dirs[name], **RUN_CONFIGS[name])
+            assert res["committed"] == [0, 1, 2, 3]
+        return dirs[name]
+    return get
 
 
 def _table_hash(spark, out_dir, table, cols):
@@ -47,25 +74,23 @@ def _table_hash(spark, out_dir, table, cols):
     return hashlib.sha256(repr(rows).encode()).hexdigest(), len(rows)
 
 
-def test_pipeline_end_to_end(spark, tmp_path):
-    res = _run(spark, tmp_path / "a")
-    assert res["committed"] == [0, 1, 2, 3]
-    h, n = _table_hash(spark, tmp_path / "a", "join_out",
-                       ["url", "region_id", "x", "y"])
+def _n_cached(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_pipeline_end_to_end(spark, finished_run):
+    out = finished_run("plain")
+    h, n = _table_hash(spark, out, "join_out", JOIN_COLS)
     assert n > 0
-    ht, nt = _table_hash(spark, tmp_path / "a", "tile_assign",
-                         ["url", "tile_z", "tile_x", "tile_y"])
+    ht, nt = _table_hash(spark, out, "tile_assign", TILE_COLS)
     assert nt > 0
     # metrics exist with per-partition rows
-    m = read_output(spark, str(tmp_path / "a"), "metrics")
+    m = read_output(spark, str(out), "metrics")
     assert m.agg(F.sum("rows_out")).first()[0] == n
 
 
-def test_kill_and_resume_byte_identical(spark, tmp_path):
-    # uninterrupted run
-    _run(spark, tmp_path / "full")
-    want = _table_hash(spark, tmp_path / "full", "join_out",
-                       ["url", "region_id", "x", "y"])
+def test_kill_and_resume_byte_identical(spark, tmp_path, finished_run):
+    want = _table_hash(spark, finished_run("plain"), "join_out", JOIN_COLS)
 
     # killed after batch 1, then resumed
     pages = synth_pages(spark, N_PAGES)
@@ -76,9 +101,86 @@ def test_kill_and_resume_byte_identical(spark, tmp_path):
     assert committed_batches(cfg.out_dir) == {0, 1}
     res = run_pipeline(spark, pages, regions, cfg)
     assert res["ran_batches"] == [2, 3]  # committed batches were skipped
-    got = _table_hash(spark, tmp_path / "resumed", "join_out",
-                      ["url", "region_id", "x", "y"])
+    got = _table_hash(spark, tmp_path / "resumed", "join_out", JOIN_COLS)
     assert got == want
+
+
+def test_crash_before_commit_reruns_batch_identically(spark, tmp_path,
+                                                      finished_run, monkeypatch):
+    """A crash after batch 1's parquet writes but before its manifest commit:
+    the resume re-runs batch 1 over its overwritten directories, and the
+    outputs hash identically to an uninterrupted run's."""
+    import spatial.pipeline as pipeline
+
+    commit = pipeline._commit_batch
+    crashed = []
+
+    def crash_once(out_dir, batch, stats):
+        if batch == 1 and not crashed:
+            crashed.append(batch)
+            raise RuntimeError("crash before commit")
+        commit(out_dir, batch, stats)
+
+    monkeypatch.setattr(pipeline, "_commit_batch", crash_once)
+    pages = synth_pages(spark, N_PAGES)
+    regions = synth_regions(spark)
+    cfg = PipelineConfig(out_dir=str(tmp_path / "crashed"))
+    before = _n_cached(spark)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        run_pipeline(spark, pages, regions, cfg)
+    # the failed batch left no cached blocks behind
+    assert _n_cached(spark) == before
+    assert committed_batches(cfg.out_dir) == {0}
+    assert os.path.isdir(os.path.join(cfg.out_dir, "join_out", "batch=1"))
+    res = run_pipeline(spark, pages, regions, cfg)
+    assert res["ran_batches"] == [1, 2, 3]
+    for table, cols in (("join_out", JOIN_COLS), ("tile_assign", TILE_COLS)):
+        assert (_table_hash(spark, cfg.out_dir, table, cols)
+                == _table_hash(spark, finished_run("plain"), table, cols))
+
+
+def test_run_pipeline_releases_cached_frames(spark, tmp_path):
+    """Neither a completed nor a killed call leaves cached blocks behind (the
+    plan's build and geometry sides, the batch's enrichment and join)."""
+    pages = synth_pages(spark, N_PAGES)
+    regions = synth_regions(spark)
+    before = _n_cached(spark)
+    run_pipeline(spark, pages, regions,
+                 PipelineConfig(out_dir=str(tmp_path / "done"), n_batches=2))
+    assert _n_cached(spark) == before
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run_pipeline(spark, pages, regions,
+                     PipelineConfig(out_dir=str(tmp_path / "killed"), n_batches=2),
+                     fail_after_batch=0)
+    assert _n_cached(spark) == before
+
+
+@pytest.mark.parametrize("name", ["plain", "clustered", "salted"])
+def test_manifest_counts_match_sinks(spark, finished_run, name):
+    """The counts observed on the writes equal what each batch's sink
+    directories hold when read back."""
+    out = str(finished_run(name))
+    for batch in range(4):
+        with open(os.path.join(out, "_manifest", f"batch-{batch}.json")) as f:
+            entry = json.load(f)
+
+        def rows(table):
+            return spark.read.parquet(
+                os.path.join(out, table, f"batch={batch}")).count()
+
+        assert entry["join_rows"] == rows("join_out")
+        assert entry["tile_rows"] == rows("tile_assign")
+        rows_out = spark.read.parquet(
+            os.path.join(out, "metrics", f"batch={batch}")) \
+            .agg(F.sum("rows_out")).first()[0]
+        assert (rows_out or 0) == entry["join_rows"]
+        by_source = entry["tile_rows_by_source"]
+        assert sorted(by_source) == ["cctld", "city", "coords"]
+        assert sum(by_source.values()) == entry["tile_rows"]
+        if name == "salted":
+            assert entry["hot_cells"] > 0
+        else:
+            assert entry["hot_cells"] == 0  # broadcast plan: nothing salted
 
 
 def test_parallelism_invariance(spark, tmp_path):
@@ -89,12 +191,12 @@ def test_parallelism_invariance(spark, tmp_path):
     regions = synth_regions(spark)
     for name, p in [("p2", pages2), ("p8", pages8)]:
         run_pipeline(spark, p, regions, PipelineConfig(out_dir=str(tmp_path / name)))
-    a = _table_hash(spark, tmp_path / "p2", "join_out", ["url", "region_id", "x", "y"])
-    b = _table_hash(spark, tmp_path / "p8", "join_out", ["url", "region_id", "x", "y"])
+    a = _table_hash(spark, tmp_path / "p2", "join_out", JOIN_COLS)
+    b = _table_hash(spark, tmp_path / "p8", "join_out", JOIN_COLS)
     assert a == b
 
 
-def test_join_out_matches_oracle(spark, tmp_path):
+def test_join_out_matches_oracle(spark, finished_run):
     """join_out rows == pure-Python PIP oracle over the same synthetic rows."""
     import numpy as np
 
@@ -104,10 +206,9 @@ def test_join_out_matches_oracle(spark, tmp_path):
 
     pages = synth_pages(spark, N_PAGES)
     regions = synth_regions(spark)
-    _run(spark, tmp_path / "o")
     got = {
         (r["url"], r["region_id"])
-        for r in read_output(spark, str(tmp_path / "o"), "join_out").collect()
+        for r in read_output(spark, str(finished_run("plain")), "join_out").collect()
     }
     located = enrich_pages(pages, 12).select("url", "lon", "lat").toPandas()
     want = set()
@@ -120,24 +221,20 @@ def test_join_out_matches_oracle(spark, tmp_path):
     assert got == want
 
 
-def test_cluster_cells_output_identical_and_range_partitioned(spark, tmp_path):
+def test_cluster_cells_output_identical_and_range_partitioned(spark, finished_run):
     """cluster_cells=N must not change the join_out row set, and each written
     parquet part file must own a cell interval disjoint from the others."""
+    import glob
+
     import pyarrow.parquet as pq
 
-    _run(spark, tmp_path / "plain")
-    _run(spark, tmp_path / "clustered", cluster_cells=4)
-    h1, n1 = _table_hash(spark, tmp_path / "plain", "join_out",
-                         ["url", "region_id", "x", "y"])
-    h2, n2 = _table_hash(spark, tmp_path / "clustered", "join_out",
-                         ["url", "region_id", "x", "y"])
+    clustered = finished_run("clustered")
+    h1, n1 = _table_hash(spark, finished_run("plain"), "join_out", JOIN_COLS)
+    h2, n2 = _table_hash(spark, clustered, "join_out", JOIN_COLS)
     assert (h1, n1) == (h2, n2)
 
     # per-file cell min/max from parquet footers, per batch dir
-    import glob
-    import os
-
-    for bdir in sorted(glob.glob(str(tmp_path / "clustered" / "join_out" / "batch=*"))):
+    for bdir in sorted(glob.glob(str(clustered / "join_out" / "batch=*"))):
         spans = []
         for f in glob.glob(os.path.join(bdir, "*.parquet")):
             pf = pq.ParquetFile(f)
