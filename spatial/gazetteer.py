@@ -1,15 +1,21 @@
 """Embedded deterministic gazetteer (FIXTURES.md §4).
 
 This table DEFINES geocode_page's output, so it is a fixture, not data: the
-rows are compiled into the repo and loaded as a broadcast-joined DataFrame.
-Coordinates are approximate city centroids; determinism, not precision, is
-the contract. cc_tld maps country-code TLDs to a country centroid for the
-lowest-priority geocoding signal.
+rows are compiled into the repo and enter Spark as a JVM local relation
+(``local_frame``: a SQL VALUES list, physical scan ``LocalTableScan``) that
+geocode_page broadcast-joins. A ``createDataFrame(<list>)`` frame would scan
+a PythonRDD instead, starting a Python worker in every task of every query
+that reads it, only to unpickle ~120 rows. Coordinates are approximate city
+centroids; determinism, not precision, is the contract. cc_tld maps
+country-code TLDs to a country centroid for the lowest-priority geocoding
+signal.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (DataType, DoubleType, LongType, StringType,
+                               StructType)
 
 # (city, country, cc_tld, lon, lat)
 CITIES: list[tuple[str, str, str, float, float]] = [
@@ -136,8 +142,47 @@ CITIES: list[tuple[str, str, str, float, float]] = [
 SCHEMA = "city string, country string, cc_tld string, lon double, lat double"
 
 
+def sql_double(v: float) -> str:
+    """Render a float as a SQL literal that DuckDB parses DIRECTLY as DOUBLE
+    (correctly rounded, bit round-trip). Plain decimal literals type as
+    DECIMAL and the column-unified scale can round the value; scientific
+    notation forces the DOUBLE parse path (in Spark SQL as well)."""
+    r = repr(float(v))
+    return r if ("e" in r or "E" in r) else r + "e0"
+
+
+def _spark_literal(v, t: DataType) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(t, DoubleType):
+        return sql_double(v)
+    if isinstance(t, LongType):
+        return f"{int(v)}L"
+    if isinstance(t, StringType):
+        # Spark SQL processes backslash escapes inside string literals
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"local_frame: unsupported column type {t.simpleString()}")
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Small fixed rows as a JVM LocalRelation (physical ``LocalTableScan``):
+    a rendered ``VALUES`` list with every column cast to the DDL ``schema``.
+    Doubles are exponent literals (bit-exact round trip), longs carry an
+    ``L`` suffix. Unlike ``createDataFrame(<list>)``, whose scan is a
+    PythonRDD, reading the frame starts no Python worker."""
+    fields = StructType.fromDDL(schema).fields
+    body = ",\n".join(
+        "(" + ", ".join(_spark_literal(v, f.dataType)
+                        for v, f in zip(row, fields)) + ")"
+        for row in rows)
+    cols = ", ".join(f"c{i}" for i in range(len(fields)))
+    casts = ", ".join(f"CAST(c{i} AS {f.dataType.simpleString()}) AS `{f.name}`"
+                      for i, f in enumerate(fields))
+    return spark.sql(f"SELECT {casts} FROM VALUES\n{body}\nAS t({cols})")
+
+
 def gazetteer_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CITIES, SCHEMA)
+    return local_frame(spark, CITIES, SCHEMA)
 
 
 def country_centroids() -> list[tuple[str, float, float]]:
@@ -157,5 +202,5 @@ def country_centroids() -> list[tuple[str, float, float]]:
 
 def country_centroids_df(spark: SparkSession) -> DataFrame:
     """One row per cc_tld: precomputed fixture centroids."""
-    return spark.createDataFrame(
-        country_centroids(), "cc_tld string, cc_lon double, cc_lat double")
+    return local_frame(spark, country_centroids(),
+                       "cc_tld string, cc_lon double, cc_lat double")

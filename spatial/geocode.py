@@ -87,8 +87,7 @@ def geocode_oracle_sql(pages_values: str) -> str:
     directly as DOUBLE. Yields (url, lon, lat, geo_source)."""
     import re as _re
 
-    from .gazetteer import country_centroids
-    from .synth import sql_double
+    from .gazetteer import country_centroids, sql_double
 
     gaz_rows = ",\n".join(
         f"('{c[0]}', '{c[2]}', {sql_double(c[3])}, {sql_double(c[4])})"

@@ -111,12 +111,11 @@ def st_contains_point(region_id: pd.Series, geom: pd.DataFrame,
 
 def prepare_regions(regions: DataFrame, level: int,
                     geom_col: str = "geom", id_col: str = "region_id") -> DataFrame:
-    """regions(geom GEOMETRY, id) -> exploded (cell, id, bbox, geom)."""
+    """regions(geom GEOMETRY, id) -> exploded (id, bbox, cell); geometry-free."""
     cover = make_cover_cells(level)
     g = F.col(geom_col)
     with_bbox = regions.select(
         F.col(id_col),
-        g.alias("__geom"),
         F.array_min(g["xs"]).alias("bbox_minx"),
         F.array_min(g["ys"]).alias("bbox_miny"),
         F.array_max(g["xs"]).alias("bbox_maxx"),
@@ -127,25 +126,31 @@ def prepare_regions(regions: DataFrame, level: int,
     )
 
 
+def _median_extent(g):
+    """Aggregate: median over regions of the larger bbox side."""
+    return F.percentile_approx(
+        F.greatest(F.array_max(g["xs"]) - F.array_min(g["xs"]),
+                   F.array_max(g["ys"]) - F.array_min(g["ys"])), 0.5
+    ).alias("ext")
+
+
+def _level_for_median_extent(ext) -> int:
+    return level_for_extent(float(ext or 1.0), target_cells_per_axis=4)
+
+
 def pick_level(regions: DataFrame, geom_col: str = "geom") -> int:
     """Join level from the median region bbox extent (driver-side tiny agg)."""
-    g = F.col(geom_col)
-    row = regions.select(
-        F.percentile_approx(
-            F.greatest(F.array_max(g["xs"]) - F.array_min(g["xs"]),
-                       F.array_max(g["ys"]) - F.array_min(g["ys"])), 0.5
-        ).alias("ext")
-    ).first()
-    ext = row["ext"] or 1.0
-    return level_for_extent(float(ext), target_cells_per_axis=4)
+    row = regions.select(_median_extent(F.col(geom_col))).first()
+    return _level_for_median_extent(row["ext"])
 
 
 class SpatialJoinPlan:
     """Prepare-once / join-many spatial join.
 
     The polygon (dim) side is static across probe batches in every real
-    pipeline, so its expensive parts -- cover-cells explode, persist, sizing
-    count + byte estimate, strategy choice -- happen exactly once here; each
+    pipeline, so its expensive parts -- one decode pass sizes the geometry
+    and picks the level, then cover-cells explode, persist, sizing count +
+    byte estimate, strategy choice -- happen exactly once here; each
     ``join`` call then contributes only distributed probe-side work.
 
     Physical shape (round-2 revision per the 100TB audit):
@@ -198,26 +203,27 @@ class SpatialJoinPlan:
         if disable_constraint_propagation:
             regions.sparkSession.conf.set(
                 "spark.sql.constraintPropagation.enabled", "false")
-        if level is None:
-            level = pick_level(regions, geom_col)
-        self.level = level
         self.region_id_col = region_id_col
         self.salt_buckets = salt_buckets
         self.hot_cell_ratio = hot_cell_ratio
-        self.build = prepare_regions(regions, level, geom_col, region_id_col).persist()
-        # geometry side: ONE row per region (not per covering cell)
+        # geometry side: ONE row per region (not per covering cell). Cached
+        # first, so the (possibly Python) geometry decode runs in one pass:
+        # the aggregate below sizes it and picks the level, and the
+        # cover-cells explode reads the cache.
         self.geoms = regions.select(
             F.col(region_id_col), F.col(geom_col).alias("__geom")).persist()
-        stats = self.build.agg(
-            F.count("*").alias("n"),
-            F.sum(F.size("__geom.xs")).alias("pts")).first()
-        self.n_build = stats["n"]
-        gstats = self.geoms.agg(
-            F.count("*").alias("n"),
-            F.sum(F.size("__geom.xs")).alias("pts")).first()
-        self.n_regions = gstats["n"]
-        self.geom_bytes = int((gstats["pts"] or 0) * self._COORD_BYTES
+        g = F.col("__geom")
+        stats = self.geoms.agg(
+            F.count("*").alias("n"), F.sum(F.size(g["xs"])).alias("pts"),
+            *([_median_extent(g)] if level is None else [])).first()
+        self.level = level if level is not None else \
+            _level_for_median_extent(stats["ext"])
+        self.n_regions = stats["n"]
+        self.geom_bytes = int((stats["pts"] or 0) * self._COORD_BYTES
                               + self.n_regions * self._GEOM_ROW_OVERHEAD)
+        self.build = prepare_regions(
+            self.geoms, self.level, "__geom", region_id_col).persist()
+        self.n_build = self.build.count()
         self.cells_bytes = int(self.n_build * self._CELL_ROW_BYTES)
         self.use_broadcast = (
             self.n_build <= broadcast_threshold
@@ -230,9 +236,8 @@ class SpatialJoinPlan:
                     salt_key: Optional[str],
                     hot_cells: Optional[list] = None) -> DataFrame:
         """probe x cover-cells candidate join + bbox prefilter (geometry-free)."""
-        cells = self.build.drop("__geom")
         if self.use_broadcast:
-            joined = probe.join(F.broadcast(cells), "cell", "inner")
+            joined = probe.join(F.broadcast(self.build), "cell", "inner")
         elif self.salt_buckets > 1:
             key = salt_key or x_col
             s = self.salt_buckets
@@ -253,7 +258,7 @@ class SpatialJoinPlan:
                     "__salt",
                     F.when(is_hot, F.pmod(F.xxhash64(F.col(key)), F.lit(s)))
                     .otherwise(F.lit(0)).cast("int"))
-                build_s = cells.withColumn(
+                build_s = self.build.withColumn(
                     "__salt",
                     F.explode(F.when(is_hot, F.sequence(F.lit(0), F.lit(s - 1)))
                               .otherwise(F.array(F.lit(0))))
@@ -261,9 +266,9 @@ class SpatialJoinPlan:
                 joined = probe_s.join(build_s, ["cell", "__salt"], "inner") \
                                 .drop("__salt")
             else:
-                joined = probe.join(cells, "cell", "inner")
+                joined = probe.join(self.build, "cell", "inner")
         else:
-            joined = probe.join(cells, "cell", "inner")
+            joined = probe.join(self.build, "cell", "inner")
         return joined.where(
             (F.col(x_col) >= F.col("bbox_minx")) & (F.col(x_col) <= F.col("bbox_maxx"))
             & (F.col(y_col) >= F.col("bbox_miny")) & (F.col(y_col) <= F.col("bbox_maxy"))
@@ -355,11 +360,18 @@ def spatial_join(
 def detect_hot_cells(points_with_cell: DataFrame, threshold_ratio: float = 0.01,
                      sample_fraction: float = 0.05) -> list[int]:
     """Sampled hot-cell detection for choosing salt_buckets (SURVEY §4.3):
-    cells holding more than threshold_ratio of a 5% sample are 'hot'."""
-    sample = points_with_cell.sample(sample_fraction, seed=42)
+    cells holding more than threshold_ratio of a 5% sample are 'hot'.
+
+    Deterministic: the sample is seeded and the list sorted, so the same
+    input partitions give the same hot set, salting layout and generated
+    code on every call. ``fraction`` is passed by keyword on purpose: the
+    positional form ``sample(f, seed=...)`` drops the seed in PySpark
+    (``seed`` is then read from the unset ``fraction`` argument) and draws
+    a new random sample for each of the two jobs below."""
+    sample = points_with_cell.sample(fraction=sample_fraction, seed=42)
     counts = sample.groupBy("cell").count()
     total = sample.count()
     if total == 0:
         return []
     hot = counts.where(F.col("count") > threshold_ratio * total)
-    return [r["cell"] for r in hot.collect()]
+    return sorted(r["cell"] for r in hot.collect())

@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .gazetteer import CITIES
+from .gazetteer import CITIES, local_frame, sql_double
 from .geometry import linestring, multilinestring, polygon
 from .ewkb import encode_hex
 
@@ -156,7 +156,7 @@ def synth_regions(spark: SparkSession, n_hot: int = _HOT_N, seed: int = 42,
     for i, city, rings in region_rings(n_hot, seed, with_holes):
         g = polygon(rings, srid=4326)
         rows.append((i, city, encode_hex(g)))
-    return spark.createDataFrame(rows, "region_id long, name string, geom_hex string")
+    return local_frame(spark, rows, "region_id long, name string, geom_hex string")
 
 
 def route_lines(n: int = 24, seed: int = 7) -> list[tuple[int, list]]:
@@ -194,7 +194,7 @@ def synth_routes(spark: SparkSession, n: int = 24, seed: int = 7) -> DataFrame:
         g = (linestring(parts[0], srid=4326) if len(parts) == 1
              else multilinestring(parts, srid=4326))
         rows.append((rid, encode_hex(g)))
-    return spark.createDataFrame(rows, "route_id long, geom_hex string")
+    return local_frame(spark, rows, "route_id long, geom_hex string")
 
 
 def cluster_points(n: int = 1200, seed: int = 13) -> list[tuple[int, float, float]]:
@@ -219,8 +219,8 @@ def cluster_points(n: int = 1200, seed: int = 13) -> list[tuple[int, float, floa
 def synth_cluster_points(spark: SparkSession, n: int = 1200,
                          seed: int = 13) -> DataFrame:
     """DataFrame form of cluster_points: (point_id, x, y)."""
-    return spark.createDataFrame(cluster_points(n, seed),
-                                 "point_id long, x double, y double")
+    return local_frame(spark, cluster_points(n, seed),
+                       "point_id long, x double, y double")
 
 
 def pages_local(n_rows: int, seed: int = 42) -> pd.DataFrame:
@@ -232,15 +232,6 @@ def pages_local(n_rows: int, seed: int = 42) -> pd.DataFrame:
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
-
-
-def sql_double(v: float) -> str:
-    """Render a float as a SQL literal that DuckDB parses DIRECTLY as DOUBLE
-    (correctly rounded, bit round-trip). Plain decimal literals type as
-    DECIMAL and the column-unified scale can round the value; scientific
-    notation forces the DOUBLE parse path."""
-    r = repr(float(v))
-    return r if ("e" in r or "E" in r) else r + "e0"
 
 
 def pages_values_sql(n_rows: int, seed: int = 42) -> str:

@@ -124,6 +124,17 @@ def test_detect_hot_cells(spark, fixtures):
     assert len(hot) >= 1  # the LA cluster must surface
 
 
+def test_detect_hot_cells_is_deterministic(spark):
+    """Same input, same hot set: the sample is seeded. 40 equally loaded
+    cells each sit right at the 2.5% threshold, so an unseeded sample would
+    flip about half of them between calls."""
+    pwc = spark.range(0, 4000, 1, 4).select((F.col("id") % 40).alias("cell"))
+    runs = [detect_hot_cells(pwc, threshold_ratio=0.025, sample_fraction=0.5)
+            for _ in range(3)]
+    assert runs[0] == runs[1] == runs[2]
+    assert runs[0] == sorted(runs[0]) and 0 < len(runs[0]) < 40
+
+
 def test_cluster_by_cell_ranges_disjoint(spark, fixtures):
     """Range partitioning on the cell id = spatial-prefix partitioning:
     every output partition must own a cell interval disjoint from all
@@ -202,3 +213,38 @@ def test_left_join_with_null_columns(spark, fixtures):
     assert len(unmatched_rows) == len(kept_ids - matched_ids)
     # row accounting: one row per (pid, region) match + one per unmatched pid
     assert len(rows) == len(want) + len(kept_ids - matched_ids)
+
+
+@pytest.mark.parametrize("kind", ["broadcast", "salted", "explicit_level"])
+def test_plan_preparation_build_side(spark, fixtures, kind):
+    """SpatialJoinPlan's one-decode preparation yields the auto-picked level
+    and exactly the geometry-free cover-cells build side: one row per
+    (region, covering cell) with the region's bbox, equal to a pure-Python
+    replay of the bbox + cover_bbox_batch explode."""
+    from spatial.cells import cover_bbox_batch
+    from spatial.join import SpatialJoinPlan
+
+    regions_df, _, _ = fixtures
+    auto = pick_level(regions_df)
+    kwargs = {"broadcast": {},
+              "salted": {"broadcast_threshold": 0, "salt_buckets": 4},
+              "explicit_level": {"level": auto + 1}}[kind]
+    plan = SpatialJoinPlan(regions_df, **kwargs)
+    try:
+        assert plan.level == kwargs.get("level", auto)
+        assert plan.use_broadcast == (kind != "salted")
+        assert "__geom" not in plan.build.columns
+        want = []
+        for rid, g in _make_regions():
+            bbox = tuple(float(v) for v in (min(g.xs), min(g.ys),
+                                            max(g.xs), max(g.ys)))
+            cover = cover_bbox_batch(*(np.asarray([v]) for v in bbox),
+                                     plan.level)[0]
+            want += [(rid, *bbox, int(c)) for c in cover.astype(np.int64)]
+        got = [tuple(r) for r in plan.build.select(
+            "region_id", "bbox_minx", "bbox_miny", "bbox_maxx", "bbox_maxy",
+            "cell").collect()]
+        assert plan.n_build == len(want)
+        assert sorted(got) == sorted(want)
+    finally:
+        plan.unpersist()

@@ -56,6 +56,78 @@ def test_flagship_join_is_broadcast_not_sortmerge(spark):
     assert "ShuffledHashJoin" not in plan
 
 
+def _bits(row) -> tuple:
+    """Row values with doubles as their exact bit pattern (-0.0 != 0.0)."""
+    return tuple(v.hex() if isinstance(v, float) else v for v in row)
+
+
+def _fixture_frames(spark):
+    """(frame, its Python fixture rows, DDL schema) for each fixed frame."""
+    from spatial import gazetteer, synth
+    from spatial.ewkb import encode_hex
+    from spatial.geometry import linestring, multilinestring, polygon
+
+    regions = [(i, city, encode_hex(polygon(rings, srid=4326)))
+               for i, city, rings in synth.region_rings()]
+    routes = [(rid, encode_hex(linestring(parts[0], srid=4326)
+                               if len(parts) == 1
+                               else multilinestring(parts, srid=4326)))
+              for rid, parts in synth.route_lines()]
+    return [
+        (gazetteer.gazetteer_df(spark), gazetteer.CITIES, gazetteer.SCHEMA),
+        (gazetteer.country_centroids_df(spark), gazetteer.country_centroids(),
+         "cc_tld string, cc_lon double, cc_lat double"),
+        (synth.synth_regions(spark), regions,
+         "region_id bigint, name string, geom_hex string"),
+        (synth.synth_routes(spark), routes, "route_id bigint, geom_hex string"),
+        (synth.synth_cluster_points(spark), synth.cluster_points(),
+         "point_id bigint, x double, y double"),
+    ]
+
+
+def test_fixture_frames_are_exact_local_relations(spark):
+    """The fixed dimension/fixture frames are JVM local relations: they
+    collect to exactly their Python rows (bit-equal doubles, same column
+    types) and their scan is LocalTableScan -- not a PythonRDD
+    (ExistingRDD), which would start a Python worker per task."""
+    for df, rows, ddl in _fixture_frames(spark):
+        want_types = [tuple(c.split()) for c in ddl.split(", ")]
+        assert df.dtypes == want_types
+        assert [_bits(r) for r in df.collect()] == [_bits(r) for r in rows]
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_local_frame_literal_round_trip(spark):
+    """Spark SQL processes backslash escapes in string literals (DuckDB
+    does not), so quotes and backslashes must survive local_frame; doubles
+    round-trip bit-exactly, including -0.0 and subnormals."""
+    from spatial.gazetteer import local_frame
+
+    rows = [(1, "it's", -0.0, 5e-324),
+            (-2, "C:\\new\\u0041 \\' \\\\", 0.1, -1.7976931348623157e308),
+            (3, "line\nbreak\t\u00e9", 1e20, 118.2437),
+            (4, None, None, 3.0)]
+    df = local_frame(spark, rows, "id long, s string, x double, y double")
+    assert df.dtypes == [("id", "bigint"), ("s", "string"),
+                         ("x", "double"), ("y", "double")]
+    assert [_bits(r) for r in df.collect()] == [_bits(r) for r in rows]
+
+
+def test_enrich_pages_crosses_into_python_only_for_extract_text(spark):
+    """The geocode's gazetteer and country-centroid broadcasts are local
+    relations, so the enrichment plan's only Python evaluation is the one
+    extract_text node."""
+    from spatial.pipeline import enrich_pages
+    from spatial.synth import synth_pages
+
+    plan = _plan(enrich_pages(synth_pages(spark, 200), 12))
+    assert "ExistingRDD" not in plan
+    python_nodes = [ln for ln in plan.splitlines()
+                    if "ArrowEvalPython" in ln or "BatchEvalPython" in ln]
+    assert len(python_nodes) == 1 and "extract_text" in python_nodes[0], plan
+
+
 def test_embedding_scan_prunes_to_used_columns(spark):
     from spatial.datapipe.similarity import cosine_topk_bruteforce
     import numpy as np
