@@ -263,16 +263,16 @@ def q_tile_assign(spark, sf_dir):
     ev = _events(spark, sf_dir)
     return ev.select(
         "event_id",
-        tile_x(_lon(), 8).alias("tile_x"),
-        tile_y(_lat(), 8).alias("tile_y"),
+        F.expr(tile_x(LON_SQL, 8)).alias("tile_x"),
+        F.expr(tile_y(LAT_SQL, 8)).alias("tile_y"),
     )
 
 
 def q_tile_rollup(spark, sf_dir):
     ev = _events(spark, sf_dir)
     return (
-        ev.select(tile_x(_lon(), 6).alias("tile_x"),
-                  tile_y(_lat(), 6).alias("tile_y"))
+        ev.select(F.expr(tile_x(LON_SQL, 6)).alias("tile_x"),
+                  F.expr(tile_y(LAT_SQL, 6)).alias("tile_y"))
         .groupBy("tile_x", "tile_y")
         .agg(F.count("*").alias("n_points"))
     )
@@ -587,11 +587,11 @@ def q_doc_fingerprint(spark, sf_dir):
 
 
 def q_s2_cell_rollup(spark, sf_dir):
-    """S2-style cell rollup at level 10, computed by the PURE-JVM column
-    pipeline (cells.cell_of_cols -- whole-stage codegen, zero Python).
-    Oracle: the same lonlat->face->uv->ij->Morton pipeline replayed in
-    DuckDB SQL (cells.cell_of_oracle_sql) -- bit-exact, and bit-identical
-    to the NumPy kernel (make_cell_of) as pinned in tests/test_cells.py."""
+    """S2-style cell rollup at level 10, computed by the PURE-JVM staged
+    projections (cells.with_cell -- whole-stage codegen, zero Python).
+    Oracle: the same lonlat->face->uv->ij->Morton stage list rendered for
+    DuckDB (cells.cell_of_oracle_sql) -- bit-exact, and bit-identical to
+    the NumPy kernel (make_cell_of) as pinned in tests/test_cells.py."""
     from spatial.cells import with_cell
 
     ev = _events(spark, sf_dir).select(_lon().alias("lon"), _lat().alias("lat"))
@@ -1693,8 +1693,8 @@ def q_tile_envelope(spark, sf_dir):
     from spatial.tiles import tile_envelope_exprs
 
     ev = _events(spark, sf_dir)
-    tiles = (ev.select(tile_x(_lon(), 6).alias("tile_x"),
-                       tile_y(_lat(), 6).alias("tile_y"))
+    tiles = (ev.select(F.expr(tile_x(LON_SQL, 6)).alias("tile_x"),
+                       F.expr(tile_y(LAT_SQL, 6)).alias("tile_y"))
              .groupBy("tile_x", "tile_y")
              .agg(F.count("*").alias("n_points")))
     w, s, e, n = tile_envelope_exprs(6)
@@ -1843,7 +1843,7 @@ def q_hilbert_layout(spark, sf_dir):
     reader prunes against. Quantization is the shared zorder op order on
     integer-derived coords; the quadrant walk is all BIGINT CASE/shift
     arithmetic (XOR spelled 3rx + ry - 2rx*ry), staged one projection per
-    bit plane -- the oracle replays every stage verbatim."""
+    bit plane -- the oracle renders the same stage list."""
     from spatial.hilbert import with_hkey
 
     ev = _events(spark, sf_dir).select(
@@ -1883,10 +1883,11 @@ def q_quadkey_rollup(spark, sf_dir):
 
     z = 6
     ev = _events(spark, sf_dir).select(
-        tile_x(_lon(), z).alias("__tx"), tile_y(_lat(), z).alias("__ty"))
+        F.expr(tile_x(LON_SQL, z)).alias("__tx"),
+        F.expr(tile_y(LAT_SQL, z)).alias("__ty"))
     enc = ev.select(
-        quadkey_expr(z, F.col("__tx"), F.col("__ty")).alias("quadkey"))
-    dx, dy = quadkey_decode_exprs(z, F.col("quadkey"))
+        quadkey_expr(z, "__tx", "__ty").alias("quadkey"))
+    dx, dy = quadkey_decode_exprs(z, "quadkey")
     return (enc.groupBy("quadkey")
             .agg(F.count("*").alias("n_points"))
             .select("quadkey", dx.alias("tile_x"), dy.alias("tile_y"),
@@ -2642,7 +2643,7 @@ def q_zorder_layout(spark, sf_dir):
     with per-prefix key ranges -- the statistics a reader's bbox predicate
     prunes against. Quantization is add/div/mul/floor in a fixed op order
     on integer-derived coords; the interleave is BIGINT bit math -- the
-    DuckDB oracle replays both verbatim."""
+    DuckDB oracle renders the same stage list."""
     from spatial.zorder import with_zkey
 
     ev = _events(spark, sf_dir).select(
@@ -6138,8 +6139,8 @@ def entry(spark: SparkSession) -> DataFrame:
                 F.col("g.ys")[0].alias("lat"))
     )
     return (
-        decoded.select(tile_x(F.col("lon"), 6).alias("tile_x"),
-                       tile_y(F.col("lat"), 6).alias("tile_y"))
+        decoded.select(F.expr(tile_x("lon", 6)).alias("tile_x"),
+                       F.expr(tile_y("lat", 6)).alias("tile_y"))
         .groupBy("tile_x", "tile_y")
         .agg(F.count("*").alias("n_points"))
         .orderBy("tile_x", "tile_y")

@@ -30,6 +30,14 @@ Because morton occupies the highest bits after face, **sorting by id sorts by
 (face, spatial prefix)**: all descendants of a cell form one contiguous id
 range (see ``cell_range``), which is what makes ``repartitionByRange("cell")``
 equal cell-prefix locality partitioning (SURVEY.md §4.3).
+
+One definition, two engines: every spatial key codec (cells here; z-order,
+Hilbert, geohash and slippy tiles in their modules) is written once, as an
+ordered list of stages, each a ``{column: SQL expression}`` dict.
+``render_spark`` applies it as one projection per stage and
+``render_duckdb`` as one nested SELECT per stage, so the Spark column and
+the DuckDB oracle evaluate the same strings. ``quantize_sql`` and
+``interleave_sql`` are the shared quantize and Morton bit-spread steps.
 """
 
 from __future__ import annotations
@@ -38,6 +46,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
+
+from .gazetteer import sql_double
 
 MAX_LEVEL = 26
 _FACE_SHIFT = 57
@@ -454,171 +464,119 @@ def level_for_extent(extent_degrees: float, target_cells_per_axis: int = 8) -> i
 
 
 # ---------------------------------------------------------------------------
-# SQL oracle (DuckDB replay of cell_from_lonlat for the driver contract)
+# one definition, two engines: staged SQL key codecs
 # ---------------------------------------------------------------------------
+
+def quantize_sql(expr: str, lo: float, span: float, n: int) -> str:
+    """floor((expr - lo) / span * n) clamped to [0, n-1] as BIGINT: one
+    subtract, one divide, one multiply, one floor, in that order. Literals
+    are DOUBLE (``sql_double``); a plain ``180.0`` types as DECIMAL."""
+    q = (f"floor((({expr}) - ({sql_double(lo)})) / {sql_double(span)}"
+         f" * {sql_double(n)})")
+    return f"CAST(least(greatest({q}, 0), {n - 1}) AS BIGINT)"
+
+
+def interleave_sql(hi: str, lo: str, bits: int) -> str:
+    """Morton interleave of the low ``bits`` bits of two BIGINT
+    expressions: bit b of ``hi`` lands at 2b+1, bit b of ``lo`` at 2b
+    (``morton_encode``'s (i, j) convention). Every operator is
+    parenthesized: the engines rank ``<<``, ``&`` and ``|`` differently."""
+    if bits == 0:
+        return "CAST(0 AS BIGINT)"
+    terms = []
+    for b in range(bits):
+        terms.append(f"((({hi}) >> {b}) & 1) << {2 * b + 1}")
+        terms.append(f"((({lo}) >> {b}) & 1) << {2 * b}")
+    return "(" + " | ".join(f"({t})" for t in terms) + ")"
+
+
+def _staged(stages: list, out) -> set:
+    return {c for stage in stages for c in stage} - set(out)
+
+
+def render_spark(df, stages: list, out):
+    """Spark rendering of a stage list (each stage a ``{column: SQL}``
+    dict): one ``withColumns`` projection of ``F.expr`` columns per stage,
+    then every staged column not in ``out`` dropped."""
+    from pyspark.sql import functions as F
+
+    for stage in stages:
+        df = df.withColumns({c: F.expr(e) for c, e in stage.items()})
+    return df.drop(*_staged(stages, out))
+
+
+def render_duckdb(source: str, stages: list, out) -> str:
+    """DuckDB rendering of the same list: one nested ``SELECT *, ...`` per
+    stage over the FROM item ``source`` (``* REPLACE`` for a column an
+    earlier stage made), then the staged columns not in ``out`` excluded."""
+    frm, made = source, set()
+    for stage in stages:
+        rep = ", ".join(f"{e} AS {c}" for c, e in stage.items() if c in made)
+        cols = [f"* REPLACE ({rep})" if rep else "*"]
+        cols += [f"{e} AS {c}" for c, e in stage.items() if c not in made]
+        frm = f"(SELECT {', '.join(cols)} FROM {frm})"
+        made.update(stage)
+    drop = ", ".join(sorted(_staged(stages, out)))
+    return f"SELECT * EXCLUDE ({drop}) FROM {frm}"
+
+
+def cell_stages(lon: str, lat: str, level: int, out: str = "cell") -> list:
+    """cell_from_lonlat as five SQL stages, step for step with the NumPy
+    kernel: xyz -> face0 -> face -> (i, j) -> Morton cell id.
+
+    Each stage is one projection over named columns. One flat expression
+    would copy the trig/branch subtree into every bit of the Morton fold
+    (~20x), costing seconds of analysis and codegen per query; Catalyst's
+    CollapseProject keeps multiply-referenced non-cheap aliases staged.
+
+    Float parity: mul/div/trig in the kernel's order; the only
+    discretization, floor((u + 1) / 2 * n), is clamp-protected at the +-1
+    face edges (dividing by 2 is the kernel's exact * 0.5). Bit-identical
+    to the NumPy kernel (tests/test_cells.py)."""
+    n = 1 << level
+    lr, br = f"radians({lon})", f"radians({lat})"
+    x, y, z, f0, face = "__co_x", "__co_y", "__co_z", "__co_f0", "__co_face"
+
+    def by_face(*cases):
+        whens = " ".join(f"WHEN {k} THEN {e}" for k, e in enumerate(cases[:5]))
+        return f"CASE {face} {whens} ELSE {cases[5]} END"
+
+    u = by_face(f"{y} / {x}", f"-{x} / {y}", f"-{x} / {z}",
+                f"{z} / {x}", f"{z} / {y}", f"-{y} / {z}")
+    v = by_face(f"{z} / {x}", f"{z} / {y}", f"-{y} / {z}",
+                f"{y} / {x}", f"-{x} / {y}", f"-{x} / {z}")
+    morton = interleave_sql("__co_i", "__co_j", level)
+    return [
+        {x: f"cos({br}) * cos({lr})", y: f"cos({br}) * sin({lr})",
+         z: f"sin({br})"},
+        {f0: f"CASE WHEN abs({x}) >= abs({y}) "
+             f"THEN (CASE WHEN abs({x}) >= abs({z}) THEN 0 ELSE 2 END) "
+             f"ELSE (CASE WHEN abs({y}) >= abs({z}) THEN 1 ELSE 2 END) END"},
+        {face: f"CASE WHEN (CASE {f0} WHEN 0 THEN {x} WHEN 1 THEN {y} "
+               f"ELSE {z} END) < 0 THEN {f0} + 3 ELSE {f0} END"},
+        {"__co_i": quantize_sql(u, -1.0, 2.0, n),
+         "__co_j": quantize_sql(v, -1.0, 2.0, n)},
+        {out: f"((CAST({face} AS BIGINT) << {_FACE_SHIFT})"
+              f" | ({morton} << {_FACE_SHIFT - 2 * level}) | {level})"},
+    ]
+
 
 def cell_of_oracle_sql(lon_sql: str, lat_sql: str, level: int,
                        source: str = "events",
                        extra_cols: str = "") -> str:
-    """DuckDB CTE chain computing cell_from_lonlat(lon, lat, level) in pure
-    SQL: the same sphere->face->uv->ij->Morton pipeline, step for step.
-
-    Float parity: every step is mul/div/trig identical in order to the NumPy
-    kernel; the only discretization (floor(s*n)) was verified bit-exact at
-    sf0.01/sf0.001 against the engine (grid coordinates sit far from cell
-    boundaries; the ±1 boundaries are clamp-protected on both sides).
-    Returns a query yielding columns: cell plus ``extra_cols``."""
-    n = 1 << level
+    """DuckDB rendering of ``cell_stages`` over ``source``: a query
+    yielding columns cell plus ``extra_cols``."""
     ec = f", {extra_cols}" if extra_cols else ""
-    return f"""
-WITH __pts AS (
-  SELECT radians({lon_sql}) AS lr, radians({lat_sql}) AS br{ec} FROM {source}
-), __xyz AS (
-  SELECT cos(br)*cos(lr) AS x, cos(br)*sin(lr) AS y, sin(br) AS z, * FROM __pts
-), __f0 AS (
-  SELECT *,
-         CASE WHEN abs(x) >= abs(y) THEN (CASE WHEN abs(x) >= abs(z) THEN 0 ELSE 2 END)
-              ELSE (CASE WHEN abs(y) >= abs(z) THEN 1 ELSE 2 END) END AS face0
-  FROM __xyz
-), __fc AS (
-  SELECT *,
-         CASE WHEN (CASE face0 WHEN 0 THEN x WHEN 1 THEN y ELSE z END) < 0
-              THEN face0 + 3 ELSE face0 END AS face
-  FROM __f0
-), __uv AS (
-  SELECT *,
-         CASE face WHEN 0 THEN y/x WHEN 1 THEN -x/y WHEN 2 THEN -x/z
-                   WHEN 3 THEN z/x WHEN 4 THEN z/y ELSE -y/z END AS u,
-         CASE face WHEN 0 THEN z/x WHEN 1 THEN z/y WHEN 2 THEN -y/z
-                   WHEN 3 THEN y/x WHEN 4 THEN -x/y ELSE -x/z END AS v
-  FROM __fc
-), __ij AS (
-  SELECT *,
-         CAST(least(greatest(floor((u + 1.0) * 0.5 * {n}), 0), {n - 1}) AS BIGINT) AS i,
-         CAST(least(greatest(floor((v + 1.0) * 0.5 * {n}), 0), {n - 1}) AS BIGINT) AS j
-  FROM __uv
-)
-SELECT (CAST(face AS BIGINT) << {_FACE_SHIFT})
-       | (CAST(list_sum(list_transform(generate_series(0, {level - 1}),
-             b -> (((i >> b) & 1) << (2*b + 1)) | (((j >> b) & 1) << (2*b))))
-          AS BIGINT) << {_FACE_SHIFT - 2 * level})
-       | {level} AS cell{ec}
-FROM __ij"""
+    staged = render_duckdb(source, cell_stages(lon_sql, lat_sql, level), ["cell"])
+    return f"SELECT cell{ec} FROM ({staged})"
 
 
-# ---------------------------------------------------------------------------
-# Spark column layer (pure JVM, whole-stage codegen -- no Python crossing)
-# ---------------------------------------------------------------------------
-
-def with_cell(df, lon_col, lat_col, level: int, out_col: str = "cell"):
-    """df -> df + pure-JVM cell-id column, STAGED through intermediate
-    projections (face, u/v, i/j each computed once as a named column; the
-    Morton fold then references cheap attributes). One flat expression
-    (cell_of_cols) duplicates the trig/branch subtree ~20x inside the
-    Morton fold, which costs seconds of driver-side analysis+codegen per
-    query; staged projections stay small because Catalyst's CollapseProject
-    declines to inline expensive multiply-referenced aliases. Runtime is
-    whole-stage codegen with zero Python either way.
-
-    Bit-parity with the NumPy kernel (make_cell_of) verified over the event
-    grid, the geocoded pages corpus and random points at levels 6-16 --
-    zero mismatches in 1.8M points (pinned in tests/test_cells.py)."""
-    from pyspark.sql import functions as F
-
-    lon, lat = F.col(lon_col) if isinstance(lon_col, str) else lon_col, \
-               F.col(lat_col) if isinstance(lat_col, str) else lat_col
-    n = 1 << level
-    lr, br = F.radians(lon), F.radians(lat)
-    cb = F.cos(br)
-    s1 = df.withColumns({
-        "__co_x": cb * F.cos(lr),
-        "__co_y": cb * F.sin(lr),
-        "__co_z": F.sin(br),
-    })
-    x, y, z = F.col("__co_x"), F.col("__co_y"), F.col("__co_z")
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    face0 = F.when(ax >= ay,
-                   F.when(ax >= az, F.lit(0)).otherwise(F.lit(2))) \
-             .otherwise(F.when(ay >= az, F.lit(1)).otherwise(F.lit(2)))
-    s2 = s1.withColumn("__co_f0", face0)
-    f0 = F.col("__co_f0")
-    comp = F.when(f0 == 0, x).when(f0 == 1, y).otherwise(z)
-    s3 = s2.withColumn("__co_face", F.when(comp < 0, f0 + 3).otherwise(f0))
-    face = F.col("__co_face")
-    u = (F.when(face == 0, y / x).when(face == 1, -x / y)
-         .when(face == 2, -x / z).when(face == 3, z / x)
-         .when(face == 4, z / y).otherwise(-y / z))
-    v = (F.when(face == 0, z / x).when(face == 1, z / y)
-         .when(face == 2, -y / z).when(face == 3, y / x)
-         .when(face == 4, -x / y).otherwise(-x / z))
-    s4 = s3.withColumns({
-        "__co_i": F.least(F.greatest(F.floor((u + 1.0) * 0.5 * n), F.lit(0)),
-                          F.lit(n - 1)).cast("long"),
-        "__co_j": F.least(F.greatest(F.floor((v + 1.0) * 0.5 * n), F.lit(0)),
-                          F.lit(n - 1)).cast("long"),
-    })
-    i, j = F.col("__co_i"), F.col("__co_j")
-    morton = F.lit(0).cast("long")
-    for b in range(level):
-        morton = (morton
-                  .bitwiseOR(F.shiftleft(F.shiftright(i, b).bitwiseAND(F.lit(1)),
-                                         2 * b + 1))
-                  .bitwiseOR(F.shiftleft(F.shiftright(j, b).bitwiseAND(F.lit(1)),
-                                         2 * b)))
-    cell = (F.shiftleft(face.cast("long"), _FACE_SHIFT)
-            .bitwiseOR(F.shiftleft(morton, _FACE_SHIFT - 2 * level))
-            .bitwiseOR(F.lit(level)))
-    return s4.withColumn(out_col, cell).drop(
-        "__co_x", "__co_y", "__co_z", "__co_f0", "__co_face", "__co_i", "__co_j")
-
-
-def cell_of_cols(lon, lat, level: int):
-    """(lon, lat) -> cell id as ONE pure column expression (whole-stage
-    codegen, zero Python). NOTE: the Morton fold duplicates the trig/branch
-    subtree per bit, so analysis/codegen of the flat form costs seconds per
-    query -- prefer ``with_cell`` (staged projections, same bits) anywhere
-    the DataFrame is in hand; this form exists for column-position call
-    sites and parity tests.
-
-    Bit-parity with the NumPy kernel verified empirically over the event
-    grid, the geocoded pages corpus and random points (JVM Math.cos and
-    NumPy's SIMD cos agree to the ulp everywhere tested; a disagreement
-    could only flip a cell when a point sits within ~1 ulp of a cell
-    boundary, which the cover-cells 1-ring pad makes harmless for joins)."""
-    from pyspark.sql import functions as F
-
-    lr, br = F.radians(lon), F.radians(lat)
-    cb = F.cos(br)
-    x = cb * F.cos(lr)
-    y = cb * F.sin(lr)
-    z = F.sin(br)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    face0 = F.when(ax >= ay,
-                   F.when(ax >= az, F.lit(0)).otherwise(F.lit(2))) \
-             .otherwise(F.when(ay >= az, F.lit(1)).otherwise(F.lit(2)))
-    comp = F.when(face0 == 0, x).when(face0 == 1, y).otherwise(z)
-    face = F.when(comp < 0, face0 + 3).otherwise(face0)
-    u = (F.when(face == 0, y / x).when(face == 1, -x / y)
-         .when(face == 2, -x / z).when(face == 3, z / x)
-         .when(face == 4, z / y).otherwise(-y / z))
-    v = (F.when(face == 0, z / x).when(face == 1, z / y)
-         .when(face == 2, -y / z).when(face == 3, y / x)
-         .when(face == 4, -x / y).otherwise(-x / z))
-    n = 1 << level
-    i = F.least(F.greatest(F.floor((u + 1.0) * 0.5 * n), F.lit(0)),
-                F.lit(n - 1)).cast("long")
-    j = F.least(F.greatest(F.floor((v + 1.0) * 0.5 * n), F.lit(0)),
-                F.lit(n - 1)).cast("long")
-    morton = F.lit(0).cast("long")
-    for b in range(level):
-        morton = (morton
-                  .bitwiseOR(F.shiftleft(F.shiftright(i, b).bitwiseAND(F.lit(1)),
-                                         2 * b + 1))
-                  .bitwiseOR(F.shiftleft(F.shiftright(j, b).bitwiseAND(F.lit(1)),
-                                         2 * b)))
-    return (F.shiftleft(face.cast("long"), _FACE_SHIFT)
-            .bitwiseOR(F.shiftleft(morton, _FACE_SHIFT - 2 * level))
-            .bitwiseOR(F.lit(level)))
+def with_cell(df, lon_col: str, lat_col: str, level: int,
+              out_col: str = "cell"):
+    """df -> df + pure-JVM cell-id column: the Spark rendering of
+    ``cell_stages`` (whole-stage codegen, zero Python)."""
+    return render_spark(df, cell_stages(lon_col, lat_col, level, out_col),
+                        [out_col])
 
 
 # ---------------------------------------------------------------------------

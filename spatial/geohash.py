@@ -10,15 +10,19 @@ and prefix-rollup exactly like the engine's S2-style cells
 (spatial/cells.py), with string ordering = Z-order locality.
 
 Implementation: quantize ``lon_q = floor((lon+180) * (2^b_lon/360))``
-(clamped), likewise lat; spread bits with the Morton magic-number shifts
-(the cells.py discipline -- staged pure-JVM projections, no Python);
-OR the spread halves together; slice 5-bit groups into alphabet chars.
+(clamped), likewise lat; Morton-interleave the halves
+(``cells.interleave_sql``: lon in the high position for an even bit
+count, lat for an odd one); slice 5-bit groups into alphabet chars.
+Decode folds the chars back with ``instr``/``substring``, gathers every
+other bit into each half and scales to exact dyadic bounds.
 
 Cross-engine exactness (oracle policy): the quantization is one add and
 one multiply of IEEE doubles -- deterministic, identical in Spark and
 DuckDB when written in the same operation order (no sums, no
-transcendentals); everything after the floor is integer bit arithmetic,
-replayed verbatim in BIGINT SQL by :func:`geohash_oracle_sql`.
+transcendentals); everything after the floor is integer bit arithmetic.
+Encode and decode are each one stage list of SQL strings that Spark
+(``with_geohash``/``with_geohash_bounds``) and the DuckDB oracle
+(``geohash_oracle_sql``/``geohash_decode_oracle_sql``) both render.
 
 100 TB shape: a handful of staged projections per row, zero shuffles,
 zero Python; the output column is a natural range-partitioning /
@@ -28,286 +32,116 @@ neighborhoods for downstream joins, same as cluster_by_cell).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from .cells import interleave_sql, render_duckdb, render_spark
+from .gazetteer import sql_double
 
 BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
-# Morton spread constants for 32->64 bit interleave (public magic numbers,
-# same family cells.py uses for the S2 curve)
-_SPREAD = [
-    (32, 0x00000000FFFFFFFF),
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-]
 
-
-def _spread_bits(col: Column) -> Column:
-    """Insert a zero bit between consecutive bits of a <=32-bit value
-    (Morton spread), as a chain of shift/mask stages."""
-    x = col
-    for shift, mask in _SPREAD:
-        x = (x.bitwiseOR(F.shiftleft(x, shift))).bitwiseAND(F.lit(mask))
-    return x
-
-
-def _spread_bits_sql(expr: str) -> str:
-    x = expr
-    for shift, mask in _SPREAD:
-        x = f"((({x}) | (({x}) << {shift})) & {mask})"
-    return x
-
-
-def geohash_col(lon: Column, lat: Column, precision: int = 9) -> Column:
-    """Geohash string of ``precision`` chars (<= 12).  Pure column math."""
+def _bits(precision: int) -> tuple[int, int]:
+    """(lon bits, lat bits) of a ``precision``-char geohash; lon takes the
+    first (most significant) bit, so it gets the extra one of an odd
+    total."""
     if not 1 <= precision <= 12:
         raise ValueError("precision must be in [1, 12]")
     total = 5 * precision
-    b_lon = (total + 1) // 2          # lon takes the even (first) bits
-    b_lat = total // 2
-    lon_q = F.least(
-        F.lit((1 << b_lon) - 1),
-        F.greatest(F.lit(0), F.floor(
-            (lon + F.lit(180.0)) * F.lit(float(1 << b_lon) / 360.0))),
-    ).cast("long")
-    lat_q = F.least(
-        F.lit((1 << b_lat) - 1),
-        F.greatest(F.lit(0), F.floor(
-            (lat + F.lit(90.0)) * F.lit(float(1 << b_lat) / 180.0))),
-    ).cast("long")
-    # Interleave MSB-first starting with lon.  Working LSB-up: for even
-    # total the last (LSB) bit is lat[0], so lat bit j sits at position 2j
-    # and lon bit j at 2j+1; for odd total lon has one extra bit and the
-    # LSB is lon[0], so the parities swap.
-    if total % 2 == 0:
-        h = F.shiftleft(_spread_bits(lon_q), 1).bitwiseOR(
-            _spread_bits(lat_q))
-    else:
-        h = _spread_bits(lon_q).bitwiseOR(
-            F.shiftleft(_spread_bits(lat_q), 1))
-    alphabet = F.lit(list(BASE32))     # element_at: robust to int-only
-    chars = [                          # substring signatures across versions
-        F.element_at(alphabet,
-                     (F.shiftright(h, 5 * (precision - 1 - c))
-                      .bitwiseAND(F.lit(31)) + 1).cast("int"))
-        for c in range(precision)
-    ]
-    return F.concat(*chars)
+    return (total + 1) // 2, total // 2
 
 
-def geohash_sql(lon: str, lat: str, precision: int = 9) -> str:
-    """The identical computation in DuckDB SQL (same operation order)."""
-    from .synth import sql_double
+def geohash_stages(lon: str, lat: str, precision: int = 9,
+                   out: str = "geohash") -> list:
+    """Geohash of ``precision`` chars (<= 12): quantize, interleave, and
+    read 5-bit groups out as base-32 chars.
 
-    total = 5 * precision
-    b_lon = (total + 1) // 2
-    b_lat = total // 2
-    klon = sql_double(float(1 << b_lon) / 360.0)
-    klat = sql_double(float(1 << b_lat) / 180.0)
-    lon_q = (f"CAST(LEAST({(1 << b_lon) - 1}, GREATEST(0, "
-             f"FLOOR((({lon}) + 180.0) * {klon}))) AS BIGINT)")
-    lat_q = (f"CAST(LEAST({(1 << b_lat) - 1}, GREATEST(0, "
-             f"FLOOR((({lat}) + 90.0) * {klat}))) AS BIGINT)")
-    if total % 2 == 0:
-        h = (f"((({_spread_bits_sql(lon_q)}) << 1) | "
-             f"({_spread_bits_sql(lat_q)}))")
-    else:
-        h = (f"(({_spread_bits_sql(lon_q)}) | "
-             f"(({_spread_bits_sql(lat_q)}) << 1))")
-    chars = [
-        f"SUBSTRING('{BASE32}', "
-        f"CAST(((({h}) >> {5 * (precision - 1 - c)}) & 31) + 1 AS INT), 1)"
-        for c in range(precision)
-    ]
-    return " || ".join(chars)
+    Interleave MSB-first starting with lon. Working LSB-up: for an even
+    total the last (LSB) bit is lat[0], so lon is the high half; for an
+    odd total lon has one extra bit and the LSB is lon[0], so lat is."""
+    b_lon, b_lat = _bits(precision)
+
+    def quant(expr, shift, span, b):
+        k = sql_double((1 << b) / span)
+        q = f"floor((({expr}) + {sql_double(shift)}) * {k})"
+        return f"CAST(least({(1 << b) - 1}, greatest(0, {q})) AS BIGINT)"
+
+    hi, lo = ("__ghx", "__ghy") if b_lon == b_lat else ("__ghy", "__ghx")
+    chars = " || ".join(
+        f"substring('{BASE32}', "
+        f"CAST(((__ghh >> {5 * (precision - 1 - c)}) & 31) + 1 AS INT), 1)"
+        for c in range(precision))
+    return [{"__ghx": quant(lon, 180.0, 360.0, b_lon),
+             "__ghy": quant(lat, 90.0, 180.0, b_lat)},
+            {"__ghh": interleave_sql(hi, lo, b_lon)},
+            {out: chars}]
 
 
 def with_geohash(df: DataFrame, lon_col: str, lat_col: str,
                  precision: int = 9, out_col: str = "geohash") -> DataFrame:
-    """Staged-projection form (the cells.with_cell discipline): each Morton
-    stage is one select over named columns, so the analyzed plan stays
-    linear in stages instead of 2^stages leaf copies -- and the expression
-    Catalyst sees per stage is small (the constraint-propagation hazard
-    documented in CLAUDE.md)."""
-    if not 1 <= precision <= 12:
-        raise ValueError("precision must be in [1, 12]")
-    total = 5 * precision
-    b_lon = (total + 1) // 2
-    b_lat = total // 2
-    keep = df.columns
-    out = df.withColumn("__ghx", F.least(
-        F.lit((1 << b_lon) - 1),
-        F.greatest(F.lit(0), F.floor(
-            (F.col(lon_col) + F.lit(180.0))
-            * F.lit(float(1 << b_lon) / 360.0)))).cast("long"))
-    out = out.withColumn("__ghy", F.least(
-        F.lit((1 << b_lat) - 1),
-        F.greatest(F.lit(0), F.floor(
-            (F.col(lat_col) + F.lit(90.0))
-            * F.lit(float(1 << b_lat) / 180.0)))).cast("long"))
-    for shift, mask in _SPREAD:
-        out = out.withColumn(
-            "__ghx", F.col("__ghx").bitwiseOR(
-                F.shiftleft(F.col("__ghx"), shift)).bitwiseAND(F.lit(mask)))
-        out = out.withColumn(
-            "__ghy", F.col("__ghy").bitwiseOR(
-                F.shiftleft(F.col("__ghy"), shift)).bitwiseAND(F.lit(mask)))
-    if total % 2 == 0:
-        h = F.shiftleft(F.col("__ghx"), 1).bitwiseOR(F.col("__ghy"))
-    else:
-        h = F.col("__ghx").bitwiseOR(F.shiftleft(F.col("__ghy"), 1))
-    out = out.withColumn("__ghh", h)
-    alphabet = F.lit(list(BASE32))
-    chars = [
-        F.element_at(alphabet,
-                     (F.shiftright(F.col("__ghh"), 5 * (precision - 1 - c))
-                      .bitwiseAND(F.lit(31)) + 1).cast("int"))
-        for c in range(precision)
-    ]
-    return (out.withColumn(out_col, F.concat(*chars))
-            .select(*keep, out_col))
+    """df -> df + geohash column (Spark rendering of ``geohash_stages``:
+    one projection per stage, pure JVM)."""
+    return render_spark(df, geohash_stages(lon_col, lat_col, precision,
+                                           out_col), [out_col])
 
 
 def geohash_oracle_sql(table_sql: str, lon: str, lat: str,
                        precision: int = 9,
                        extra_cols: str = "") -> str:
-    """CTE-staged replay (one CTE per Morton stage -- the string form of
-    the staged projections above, avoiding 2^stages expression blowup).
-    ``extra_cols`` (e.g. ``"url, "``) are carried through every stage."""
-    from .synth import sql_double
-
-    total = 5 * precision
-    b_lon = (total + 1) // 2
-    b_lat = total // 2
-    klon = sql_double(float(1 << b_lon) / 360.0)
-    klat = sql_double(float(1 << b_lat) / 180.0)
-    ctes = [f"""__gh0 AS (
-  SELECT {extra_cols}
-    CAST(LEAST({(1 << b_lon) - 1}, GREATEST(0,
-      FLOOR((({lon}) + 180.0) * {klon}))) AS BIGINT) AS x,
-    CAST(LEAST({(1 << b_lat) - 1}, GREATEST(0,
-      FLOOR((({lat}) + 90.0) * {klat}))) AS BIGINT) AS y
-  FROM ({table_sql}) __ghsrc)"""]
-    for i, (shift, mask) in enumerate(_SPREAD, 1):
-        ctes.append(f"""__gh{i} AS (
-  SELECT {extra_cols}
-    ((x | (x << {shift})) & {mask}) AS x,
-    ((y | (y << {shift})) & {mask}) AS y
-  FROM __gh{i - 1})""")
-    last = f"__gh{len(_SPREAD)}"
-    h = "((x << 1) | y)" if total % 2 == 0 else "(x | (y << 1))"
-    chars = " || ".join(
-        f"SUBSTRING('{BASE32}', "
-        f"CAST(((h >> {5 * (precision - 1 - c)}) & 31) + 1 AS INT), 1)"
-        for c in range(precision))
-    cte_block = ",\n".join(ctes)
-    return f"""
-WITH {cte_block},
-__ghh AS (SELECT {extra_cols} {h} AS h FROM {last})
-SELECT {extra_cols} {chars} AS geohash FROM __ghh"""
+    """DuckDB rendering of ``geohash_stages`` over ``table_sql``:
+    ``extra_cols`` (e.g. ``"url, "``) plus ``geohash``."""
+    staged = render_duckdb(f"({table_sql}) __ghsrc",
+                           geohash_stages(lon, lat, precision), ["geohash"])
+    return f"SELECT {extra_cols} geohash FROM ({staged})"
 
 
 # -- decode (inverse codec) ---------------------------------------------------
 
-# inverse-Morton compact stages (merge the zero-interleaved bits back)
-_COMPACT = [
-    (1, 0x3333333333333333),
-    (2, 0x0F0F0F0F0F0F0F0F),
-    (4, 0x00FF00FF00FF00FF),
-    (8, 0x0000FFFF0000FFFF),
-    (16, 0x00000000FFFFFFFF),
-]
-_EVEN = 0x5555555555555555
+def geohash_bounds_stages(gh: str, precision: int = 9) -> list:
+    """Geohash DECODE (the inverse codec; PostGIS ST_GeomFromGeoHash /
+    ST_Box2dFromGeoHash analog): the cell bounds (lon_lo, lat_lo, lon_hi,
+    lat_hi) of a ``precision``-char geohash.
+
+    The chars fold to the 5p-bit interleaved value (one unrolled
+    ``instr`` lookup per char), each half gathers back every other bit,
+    and the bounds come out EXACT -- the cell width 360/2^b_lon is a
+    dyadic multiple of 45, so quantized*width and the -180 shift are exact
+    double arithmetic (every output bit deterministic cross-engine)."""
+    b_lon, b_lat = _bits(precision)
+    fold = " + ".join(
+        f"(CAST(instr('{BASE32}', substring({gh}, {c + 1}, 1)) AS BIGINT)"
+        f" - 1) * {32 ** (precision - 1 - c)}" for c in range(precision))
+    x_at, y_at = (1, 0) if b_lon == b_lat else (0, 1)
+
+    def gather(at, bits):
+        terms = (f"(((__dh >> {2 * b + at}) & 1) << {b})" for b in range(bits))
+        return "(" + " | ".join(terms) + ")"
+
+    wlon = sql_double(360.0 / (1 << b_lon))
+    wlat = sql_double(180.0 / (1 << b_lat))
+    return [{"__dh": f"({fold})"},
+            {"__dx": gather(x_at, b_lon), "__dy": gather(y_at, b_lat)},
+            {"lon_lo": f"__dx * {wlon} - 1.8e2",
+             "lat_lo": f"__dy * {wlat} - 9.0e1",
+             "lon_hi": f"(__dx + 1) * {wlon} - 1.8e2",
+             "lat_hi": f"(__dy + 1) * {wlat} - 9.0e1"}]
+
+
+_BOUNDS = ["lon_lo", "lat_lo", "lon_hi", "lat_hi"]
 
 
 def with_geohash_bounds(df: DataFrame, gh_col: str = "geohash",
                         precision: int = 9) -> DataFrame:
-    """Geohash DECODE (the inverse codec; PostGIS ST_GeomFromGeoHash /
-    ST_Box2dFromGeoHash analog): append the cell bounds
-    (lon_lo, lat_lo, lon_hi, lat_hi) of each `precision`-char geohash.
-
-    Pure-JVM staged projections (the with_geohash discipline): chars fold
-    to the 5p-bit interleaved value (one aggregate over instr lookups),
-    the lon/lat halves de-interleave through the inverse-Morton compact
-    stages, and the bounds come out EXACT -- the cell width 360/2^b_lon
-    is a dyadic multiple of 45, so quantized*width and the -180 shift are
-    exact double arithmetic (no rounding policy needed, every output bit
-    deterministic cross-engine). Zero shuffle, zero Python."""
-    if not 1 <= precision <= 12:
-        raise ValueError("precision must be in [1, 12]")
-    total = 5 * precision
-    b_lon = (total + 1) // 2
-    b_lat = total // 2
-    keep = df.columns
-    out = df.withColumn("__dh", F.expr(
-        f"aggregate(transform(sequence(1, {precision}), "
-        f"i -> CAST(instr('{BASE32}', substring({gh_col}, i, 1)) AS BIGINT)"
-        f" - 1), CAST(0 AS BIGINT), (a, d) -> a * 32 + d)"))
-    even = F.lit(_EVEN)
-    if total % 2 == 0:
-        xi = F.shiftright(F.col("__dh"), 1).bitwiseAND(even)
-        yi = F.col("__dh").bitwiseAND(even)
-    else:
-        xi = F.col("__dh").bitwiseAND(even)
-        yi = F.shiftright(F.col("__dh"), 1).bitwiseAND(even)
-    out = out.withColumn("__dx", xi).withColumn("__dy", yi)
-    for shift, mask in _COMPACT:
-        out = out.withColumn("__dx", F.col("__dx").bitwiseOR(
-            F.shiftright(F.col("__dx"), shift)).bitwiseAND(F.lit(mask)))
-        out = out.withColumn("__dy", F.col("__dy").bitwiseOR(
-            F.shiftright(F.col("__dy"), shift)).bitwiseAND(F.lit(mask)))
-    wlon = 360.0 / (1 << b_lon)
-    wlat = 180.0 / (1 << b_lat)
-    return out.select(
-        *keep,
-        (F.col("__dx") * F.lit(wlon) - F.lit(180.0)).alias("lon_lo"),
-        (F.col("__dy") * F.lit(wlat) - F.lit(90.0)).alias("lat_lo"),
-        ((F.col("__dx") + 1) * F.lit(wlon) - F.lit(180.0)).alias("lon_hi"),
-        ((F.col("__dy") + 1) * F.lit(wlat) - F.lit(90.0)).alias("lat_hi"))
+    """df -> df + the cell bounds of each geohash (Spark rendering of
+    ``geohash_bounds_stages``). Zero shuffle, zero Python."""
+    return render_spark(df, geohash_bounds_stages(gh_col, precision), _BOUNDS)
 
 
 def geohash_decode_oracle_sql(table_sql: str, gh_expr: str,
                               precision: int = 9,
                               extra_cols: str = "") -> str:
-    """DuckDB replay of with_geohash_bounds: identical char fold,
-    identical compact stages (one CTE each), identical exact-dyadic
-    bound arithmetic."""
-    from .synth import sql_double
-
-    total = 5 * precision
-    b_lon = (total + 1) // 2
-    b_lat = total // 2
-    fold = (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            f"list_transform(generate_series(1, {precision}), "
-            f"i -> CAST(strpos('{BASE32}', substring(({gh_expr}), "
-            f"CAST(i AS INT), 1)) AS BIGINT) - 1)), (a, d) -> a * 32 + d)")
-    if total % 2 == 0:
-        x0 = f"((h >> 1) & {_EVEN})"
-        y0 = f"(h & {_EVEN})"
-    else:
-        x0 = f"(h & {_EVEN})"
-        y0 = f"((h >> 1) & {_EVEN})"
-    ctes = [f"""__gd0 AS (
-  SELECT {extra_cols} h FROM (
-    SELECT {extra_cols} {fold} AS h FROM ({table_sql}) __gdsrc) __gdh)""",
-            f"""__gd1 AS (
-  SELECT {extra_cols} {x0} AS x, {y0} AS y FROM __gd0)"""]
-    for i, (shift, mask) in enumerate(_COMPACT, 2):
-        ctes.append(f"""__gd{i} AS (
-  SELECT {extra_cols}
-    ((x | (x >> {shift})) & {mask}) AS x,
-    ((y | (y >> {shift})) & {mask}) AS y
-  FROM __gd{i - 1})""")
-    last = f"__gd{len(_COMPACT) + 1}"
-    wlon = sql_double(360.0 / (1 << b_lon))
-    wlat = sql_double(180.0 / (1 << b_lat))
-    return ("WITH " + ",\n".join(ctes) + f"""
-SELECT {extra_cols}
-  x * {wlon} - 180.0e0 AS lon_lo,
-  y * {wlat} - 90.0e0 AS lat_lo,
-  (x + 1) * {wlon} - 180.0e0 AS lon_hi,
-  (y + 1) * {wlat} - 90.0e0 AS lat_hi
-FROM {last}""")
+    """DuckDB rendering of ``geohash_bounds_stages`` over ``table_sql``:
+    ``extra_cols`` plus the four bounds."""
+    staged = render_duckdb(f"({table_sql}) __gdsrc",
+                           geohash_bounds_stages(f"({gh_expr})", precision),
+                           _BOUNDS)
+    return f"SELECT {extra_cols} {', '.join(_BOUNDS)} FROM ({staged})"

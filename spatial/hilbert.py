@@ -16,22 +16,23 @@ Algorithm: the classical per-level quadrant walk (the public xy2d
 recurrence): for each bit plane s = 2^(level-1) .. 1, the quadrant digit
 is (3*rx) XOR ry and the frame rotates/flips. Everything is BIGINT
 shift/mask/CASE arithmetic -- the XOR is spelled 3*rx + ry - 2*rx*ry
-(identical truth table, pure mul/add) so the DuckDB oracle replays the
-exact op sequence with no engine-specific bit builtins. The flip uses the
-full-width constant (n-1-x), keeping every intermediate in [0, n) --
-no negative values ever reach a shift/mask (the s-1 variant goes
-negative mid-fold, where SQL engines' >> semantics diverge).
+(identical truth table, pure mul/add), so both engines evaluate it with
+no engine-specific bit builtins. The flip uses the full-width constant
+(n-1-x), keeping every intermediate in [0, n) -- no negative values ever
+reach a shift/mask (the s-1 variant goes negative mid-fold, where SQL
+engines' >> semantics diverge).
 
 Expression staging: each level rewrites (x, y, d) and references each of
-them several times, so levels are staged as named columns per step
-(withColumns); Catalyst's CollapseProject keeps multiply-referenced
-non-cheap aliases staged (the cells.with_cell rationale), so the
-expression tree stays LINEAR in `level`, not exponential. Zero Python,
-whole-stage codegen end to end.
+them several times, so ``hkey_stages`` is one stage per bit plane;
+Catalyst's CollapseProject keeps multiply-referenced non-cheap aliases
+staged (the cells.with_cell rationale), so the expression tree stays
+LINEAR in `level`, not exponential. Zero Python, whole-stage codegen end
+to end.
 
-Float-parity policy: quantization is the zorder _quant op order
-(add/div/mul/floor on integer-derived coords -- bit-identical doubles);
-everything after is integer-exact.
+Float-parity policy: quantization is ``cells.quantize_sql`` (the zorder
+op order on integer-derived coords -- bit-identical doubles); everything
+after is integer-exact. Spark and the DuckDB oracle render the same stage
+list, so they evaluate the same SQL strings.
 
 Reference scope note: the reference (haskell-postgis,
 src/Database/Postgis/Serialize.hs) is a codec library with no storage
@@ -41,10 +42,9 @@ cell-prefix range partitioning lineage).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from spatial.zorder import _quant
+from .cells import quantize_sql, render_duckdb, render_spark
 
 
 def hilbert_xy2d(level: int, x: int, y: int) -> int:
@@ -67,62 +67,36 @@ def hilbert_xy2d(level: int, x: int, y: int) -> int:
     return d
 
 
-def with_hkey(df: DataFrame, lon_col, lat_col, level: int = 12,
-              out_col: str = "hkey") -> DataFrame:
-    """df -> df + Hilbert key column: ``level``-bit quantization per axis
-    (zorder._quant, shared op order), then the staged quadrant walk.
-    One narrow projection chain, no shuffle, no Python."""
-    lon = F.col(lon_col) if isinstance(lon_col, str) else lon_col
-    lat = F.col(lat_col) if isinstance(lat_col, str) else lat_col
+def hkey_stages(lon: str, lat: str, level: int = 12,
+                out: str = "hkey") -> list:
+    """``level``-bit quantization per axis, then one stage per bit plane
+    rewriting (__hx, __hy, __hd) -- ``hilbert_xy2d`` op for op."""
     n = 1 << level
-    out = df.withColumns({
-        "__hx": _quant(lon, -180.0, 360.0, n),
-        "__hy": _quant(lat, -90.0, 180.0, n),
-        "__hd": F.lit(0).cast("long"),
-    })
+    stages = [{"__hx": quantize_sql(lon, -180.0, 360.0, n),
+               "__hy": quantize_sql(lat, -90.0, 180.0, n),
+               "__hd": "CAST(0 AS BIGINT)"}]
     for b in range(level - 1, -1, -1):
-        x, y, d = F.col("__hx"), F.col("__hy"), F.col("__hd")
-        rx = F.shiftright(x, b).bitwiseAND(F.lit(1))
-        ry = F.shiftright(y, b).bitwiseAND(F.lit(1))
-        digit = (F.lit(3) * rx + ry - F.lit(2) * rx * ry)
-        flip = ry == F.lit(0)
-        mirror = flip & (rx == F.lit(1))
-        out = out.withColumns({
-            "__hd": d + F.shiftleft(digit, 2 * b),
-            "__hx": (F.when(mirror, F.lit(n - 1) - y)
-                     .when(flip, y).otherwise(x)),
-            "__hy": (F.when(mirror, F.lit(n - 1) - x)
-                     .when(flip, x).otherwise(y)),
-        })
-    return (out.withColumn(out_col, F.col("__hd"))
-            .drop("__hx", "__hy", "__hd"))
+        rx, ry = f"((__hx >> {b}) & 1)", f"((__hy >> {b}) & 1)"
+        mirror, flip = f"{ry} = 0 AND {rx} = 1", f"{ry} = 0"
+        stages.append({
+            "__hd": f"__hd + ((3 * {rx} + {ry} - 2 * {rx} * {ry}) << {2 * b})",
+            "__hx": f"CASE WHEN {mirror} THEN {n - 1} - __hy "
+                    f"WHEN {flip} THEN __hy ELSE __hx END",
+            "__hy": f"CASE WHEN {mirror} THEN {n - 1} - __hx "
+                    f"WHEN {flip} THEN __hx ELSE __hy END"})
+    return stages + [{out: "__hd"}]
+
+
+def with_hkey(df: DataFrame, lon_col: str, lat_col: str, level: int = 12,
+              out_col: str = "hkey") -> DataFrame:
+    """df -> df + Hilbert key column (Spark rendering of ``hkey_stages``).
+    One narrow projection chain, no shuffle, no Python."""
+    return render_spark(df, hkey_stages(lon_col, lat_col, level, out_col),
+                        [out_col])
 
 
 def hkey_oracle_sql(lon_sql: str, lat_sql: str, level: int = 12) -> str:
-    """DuckDB replay of with_hkey: identical quantization op order, the
-    identical per-level (x, y, d) rewrite as a chain of nested SELECTs
-    (one per bit plane -- the staged-column structure, spelled as
-    subqueries). Expects a relation __hi_in providing the input rows."""
-    n = 1 << level
-
-    def quant(expr: str, lo: float, span: float) -> str:
-        q = f"FLOOR((({expr}) - ({lo})) / ({span}) * {float(n)})"
-        return f"CAST(LEAST(GREATEST({q}, 0), {n - 1}) AS BIGINT)"
-
-    sql = (f"SELECT *, {quant(lon_sql, -180.0, 360.0)} AS __hx, "
-           f"{quant(lat_sql, -90.0, 180.0)} AS __hy, "
-           f"CAST(0 AS BIGINT) AS __hd FROM __hi_in")
-    for b in range(level - 1, -1, -1):
-        rx = f"((__hx >> {b}) & 1)"
-        ry = f"((__hy >> {b}) & 1)"
-        digit = f"(3*{rx} + {ry} - 2*{rx}*{ry})"
-        sql = f"""
-        SELECT * EXCLUDE (__hx, __hy, __hd),
-               __hd + ({digit} << {2 * b}) AS __hd,
-               CASE WHEN {ry} = 0 AND {rx} = 1 THEN {n - 1} - __hy
-                    WHEN {ry} = 0 THEN __hy ELSE __hx END AS __hx,
-               CASE WHEN {ry} = 0 AND {rx} = 1 THEN {n - 1} - __hx
-                    WHEN {ry} = 0 THEN __hx ELSE __hy END AS __hy
-        FROM ({sql})"""
-    return (f"SELECT * EXCLUDE (__hx, __hy, __hd), __hd AS hkey "
-            f"FROM ({sql})")
+    """DuckDB rendering of ``hkey_stages`` over a relation ``__hi_in``:
+    its rows plus ``hkey``."""
+    return render_duckdb("__hi_in", hkey_stages(lon_sql, lat_sql, level),
+                         ["hkey"])

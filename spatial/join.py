@@ -186,8 +186,6 @@ class SpatialJoinPlan:
         broadcast_threshold: int = 2_000_000,
         salt_buckets: int = 0,
         broadcast_max_bytes: int = 256 << 20,
-        hot_cell_ratio: float = 0.01,
-        disable_constraint_propagation: bool = True,
     ):
         # Catalyst's constraint propagation rewrites the cell equi-join by
         # substituting the staged cell expression into inferred filter
@@ -197,15 +195,11 @@ class SpatialJoinPlan:
         # transitive predicates are worthless for this plan (keys are never
         # null by construction), so the rule is turned off for the SESSION
         # (it cannot be scoped per query: optimization happens at each
-        # action, long after this constructor). Callers who need inferred
-        # constraints elsewhere pass disable_constraint_propagation=False
-        # and set the conf around their own actions.
-        if disable_constraint_propagation:
-            regions.sparkSession.conf.set(
-                "spark.sql.constraintPropagation.enabled", "false")
+        # action, long after this constructor).
+        regions.sparkSession.conf.set(
+            "spark.sql.constraintPropagation.enabled", "false")
         self.region_id_col = region_id_col
         self.salt_buckets = salt_buckets
-        self.hot_cell_ratio = hot_cell_ratio
         # geometry side: ONE row per region (not per covering cell). Cached
         # first, so the (possibly Python) geometry decode runs in one pass:
         # the aggregate below sizes it and picks the level, and the
@@ -248,7 +242,7 @@ class SpatialJoinPlan:
             # differently-distributed probes pass hot_cells explicitly.
             if hot_cells is None:
                 if self._hot_cache is None:
-                    self._hot_cache = detect_hot_cells(probe, self.hot_cell_ratio)
+                    self._hot_cache = detect_hot_cells(probe)
                 hot = self._hot_cache
             else:
                 hot = hot_cells

@@ -47,8 +47,8 @@ def streaming_tile_rollup(pages_stream: DataFrame, zoom: int = 8) -> DataFrame:
 
     located = geocode_page(pages_stream).where(F.col("lon").isNotNull())
     return (
-        located.withColumn("tile_x", tile_x(F.col("lon"), zoom))
-        .withColumn("tile_y", tile_y(F.col("lat"), zoom))
+        located.withColumn("tile_x", F.expr(tile_x("lon", zoom)))
+        .withColumn("tile_y", F.expr(tile_y("lat", zoom)))
         .groupBy("tile_x", "tile_y")
         .agg(F.count("*").alias("n_pages"))
     )

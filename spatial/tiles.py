@@ -1,10 +1,11 @@
 """Web-Mercator (slippy-map) raster tiling -- pure column math, zero UDF.
 
 tile_assign is the engine's raster-tile <-> vector assignment primitive
-(net-new vs the reference, mandated by BASELINE.json north_star). It is
-deliberately expressed as built-in column functions so it stays inside
-whole-stage codegen; the identical closed-form formula is the DuckDB oracle
-in __spark_entry__.py.
+(net-new vs the reference, mandated by BASELINE.json north_star). Each
+formula is written once as a SQL expression string (``tile_x``,
+``tile_y``, ``quadkey_oracle_sql``, ...): Spark evaluates it with
+``F.expr`` and stays inside whole-stage codegen, and the DuckDB oracles in
+__spark_entry__.py evaluate the same string.
 
 Formulas (OSM slippy map):
     n      = 2^z
@@ -16,36 +17,40 @@ to [0, n-1] (lon = +180 maps to the last column).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .cells import interleave_sql, quantize_sql
+from .gazetteer import sql_double
 
 MERCATOR_MAX_LAT = 85.05112878
 
 
-def tile_x(lon: Column, zoom: int) -> Column:
-    n = F.lit(float(2 ** zoom))
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(2 ** zoom - 1)).cast("long")
+def tile_x(lon: str, zoom: int) -> str:
+    """Tile column of a longitude SQL expression (BIGINT SQL string)."""
+    return quantize_sql(lon, -180.0, 360.0, 2 ** zoom)
 
 
-def tile_y(lat: Column, zoom: int) -> Column:
-    n = F.lit(float(2 ** zoom))
-    lat_c = F.least(F.greatest(lat, F.lit(-MERCATOR_MAX_LAT)), F.lit(MERCATOR_MAX_LAT))
-    lat_rad = F.radians(lat_c)
+def tile_y(lat: str, zoom: int) -> str:
+    """Tile row of a latitude SQL expression (BIGINT SQL string)."""
+    m = sql_double(MERCATOR_MAX_LAT)
+    lat_rad = f"radians(least(greatest({lat}, -{m}), {m}))"
     # asinh(tan(x)) = ln(tan(x) + 1/cos(x)) -- sec form keeps DuckDB parity
-    merc = F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad))
-    raw = F.floor((F.lit(1.0) - merc / F.lit(3.141592653589793)) / F.lit(2.0) * n)
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(2 ** zoom - 1)).cast("long")
+    merc = f"ln(tan({lat_rad}) + 1.0e0 / cos({lat_rad}))"
+    raw = (f"floor((1.0e0 - {merc} / {sql_double(math.pi)}) / 2.0e0"
+           f" * {sql_double(2 ** zoom)})")
+    return f"CAST(least(greatest({raw}, 0), {2 ** zoom - 1}) AS BIGINT)"
 
 
 def tile_assign(df: DataFrame, lon_col: str, lat_col: str, zoom: int,
                 out_prefix: str = "tile") -> DataFrame:
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    return (
-        df.withColumn(f"{out_prefix}_z", F.lit(zoom).cast("int"))
-        .withColumn(f"{out_prefix}_x", tile_x(lon, zoom))
-        .withColumn(f"{out_prefix}_y", tile_y(lat, zoom))
-    )
+    return df.withColumns({
+        f"{out_prefix}_z": F.lit(zoom).cast("int"),
+        f"{out_prefix}_x": F.expr(tile_x(lon_col, zoom)),
+        f"{out_prefix}_y": F.expr(tile_y(lat_col, zoom)),
+    })
 
 
 def tile_id(zoom: int, tx: Column, ty: Column) -> Column:
@@ -54,14 +59,9 @@ def tile_id(zoom: int, tx: Column, ty: Column) -> Column:
 
 
 def tile_assign_oracle_sql(lon_expr: str, lat_expr: str, zoom: int) -> tuple[str, str]:
-    """The same closed-form formulas as ANSI SQL (DuckDB oracle)."""
-    n = float(2 ** zoom)
-    mx = 2 ** zoom - 1
-    tx = (f"CAST(LEAST(GREATEST(FLOOR(({lon_expr} + 180.0) / 360.0 * {n}), 0), {mx}) AS BIGINT)")
-    lat_c = f"LEAST(GREATEST({lat_expr}, -85.05112878), 85.05112878)"
-    merc = f"LN(TAN(RADIANS({lat_c})) + 1.0 / COS(RADIANS({lat_c})))"
-    ty = (f"CAST(LEAST(GREATEST(FLOOR((1.0 - {merc} / PI()) / 2.0 * {n}), 0), {mx}) AS BIGINT)")
-    return tx, ty
+    """(tile_x, tile_y) SQL strings for the DuckDB oracle: the very strings
+    tile_assign evaluates."""
+    return tile_x(lon_expr, zoom), tile_y(lat_expr, zoom)
 
 
 def tile_cover(df: DataFrame, geom_col: str, zoom: int,
@@ -75,17 +75,15 @@ def tile_cover(df: DataFrame, geom_col: str, zoom: int,
     bbox's MAX latitude. Exact (non-bbox) coverage, when needed, is this
     followed by a PIP refine of tile centers/corners against the geometry --
     same pattern as the spatial join's cover-then-refine."""
-    from .kernels import geom_bbox_cols
-
-    minx, miny, maxx, maxy = geom_bbox_cols(F.col(geom_col))
-    txa, txb = tile_x(minx, zoom), tile_x(maxx, zoom)
-    tya, tyb = tile_y(maxy, zoom), tile_y(miny, zoom)
+    xs, ys = f"{geom_col}.xs", f"{geom_col}.ys"
+    txs = F.sequence(F.expr(tile_x(f"array_min({xs})", zoom)),
+                     F.expr(tile_x(f"array_max({xs})", zoom)))
+    tys = F.sequence(F.expr(tile_y(f"array_max({ys})", zoom)),
+                     F.expr(tile_y(f"array_min({ys})", zoom)))
     return (
         df.withColumn(f"{out_prefix}_z", F.lit(zoom).cast("int"))
-        .withColumn(f"{out_prefix}_x",
-                    F.explode(F.sequence(txa, txb)))
-        .withColumn(f"{out_prefix}_y",
-                    F.explode(F.sequence(tya, tyb)))
+        .withColumn(f"{out_prefix}_x", F.explode(txs))
+        .withColumn(f"{out_prefix}_y", F.explode(tys))
     )
 
 
@@ -166,66 +164,48 @@ def tile_envelope_exprs(zoom: int, tx_expr: str = "tile_x",
     return west, south, east, north
 
 
-def quadkey_expr(zoom: int, tx: Column, ty: Column) -> Column:
-    """(tx, ty) -> Bing-maps quadkey string: ``zoom`` base-4 digit chars,
-    most-significant tile bit first, digit = x_bit + 2*y_bit (the public
-    Microsoft Bing tile-system encoding -- the string form of the Morton
-    interleave, one char per zoom level, so a tile's quadkey is PREFIXED
-    by every ancestor's: prefix range scans give pyramid rollups and
-    spatial pruning for free on a plain string sort). Pure integer
-    shift/mask + substring on a 4-char literal; zero Python.
-
-    zoom >= 1 required: the z=0 root's quadkey is the empty string, which
-    a zero-arg concat / empty SQL fragment cannot spell consistently in
-    both engines -- callers wanting the root write F.lit('')."""
-    if zoom < 1:
-        raise ValueError("quadkey_expr requires zoom >= 1")
-    digits = []
-    for i in range(zoom - 1, -1, -1):
-        d = (F.shiftright(tx, i).bitwiseAND(F.lit(1))
-             + F.lit(2) * F.shiftright(ty, i).bitwiseAND(F.lit(1)))
-        digits.append(F.substring(F.lit("0123"), F.lit(1) + d, F.lit(1)))
-    return F.concat(*digits)
+def quadkey_expr(zoom: int, tx: str, ty: str) -> Column:
+    """(tx, ty) SQL expressions -> Bing-maps quadkey string column: the
+    Spark rendering of ``quadkey_oracle_sql``."""
+    return F.expr(quadkey_oracle_sql(zoom, tx, ty))
 
 
-def quadkey_decode_exprs(zoom: int, qk: Column) -> tuple[Column, Column]:
-    """quadkey string -> (tx, ty): the inverse codec. Each char yields one
-    bit of tx (digit & 1) and one of ty (digit >> 1), weighted by its
-    level. Completes the quadkey codec pair (the geohash encode/decode
-    precedent). zoom >= 1 (see quadkey_expr)."""
-    if zoom < 1:
-        raise ValueError("quadkey_decode_exprs requires zoom >= 1")
-    tx = F.lit(0).cast("long")
-    ty = F.lit(0).cast("long")
-    for i in range(zoom):
-        d = F.substring(qk, i + 1, 1).cast("long")
-        tx = tx + F.shiftleft(d.bitwiseAND(F.lit(1)), zoom - 1 - i)
-        ty = ty + F.shiftleft(F.shiftright(d, 1), zoom - 1 - i)
-    return tx, ty
+def quadkey_decode_exprs(zoom: int, qk: str) -> tuple[Column, Column]:
+    """quadkey SQL expression -> (tx, ty) columns: the Spark rendering of
+    ``quadkey_decode_oracle_sql``."""
+    tx, ty = quadkey_decode_oracle_sql(zoom, qk)
+    return F.expr(tx), F.expr(ty)
 
 
 def quadkey_oracle_sql(zoom: int, tx_expr: str, ty_expr: str) -> str:
-    """DuckDB replay of quadkey_expr: identical shift/mask digits,
-    identical 1-based substring on the '0123' literal. zoom >= 1 (see
-    quadkey_expr)."""
+    """(tx, ty) -> Bing-maps quadkey: ``zoom`` base-4 digit chars, most
+    significant first, digit = x_bit + 2*y_bit (the public Microsoft Bing
+    tile-system encoding) -- the Morton interleave of (ty, tx) read out
+    two bits at a time, so a tile's quadkey is PREFIXED by every
+    ancestor's: prefix range scans give pyramid rollups and spatial
+    pruning on a plain string sort. Pure integer shift/mask + substring
+    on a 4-char literal; zero Python.
+
+    zoom >= 1 required: the z=0 root's quadkey is the empty string, which
+    an empty SQL fragment cannot spell -- callers wanting the root write
+    ''."""
     if zoom < 1:
         raise ValueError("quadkey_oracle_sql requires zoom >= 1")
-    parts = []
-    for i in range(zoom - 1, -1, -1):
-        d = (f"(((({tx_expr}) >> {i}) & 1) + 2 * ((({ty_expr}) >> {i}) & 1))")
-        parts.append(f"SUBSTRING('0123', 1 + {d}, 1)")
-    return " || ".join(parts)
+    m = interleave_sql(ty_expr, tx_expr, zoom)
+    return " || ".join(
+        f"substring('0123', CAST((({m} >> {2 * i}) & 3) + 1 AS INT), 1)"
+        for i in range(zoom - 1, -1, -1))
 
 
 def quadkey_decode_oracle_sql(zoom: int, qk_expr: str) -> tuple[str, str]:
-    """DuckDB replay of quadkey_decode_exprs (shift/mask spellings
-    shared: & 1 and >> 1 on a BIGINT digit). zoom >= 1 (see
-    quadkey_expr)."""
+    """quadkey -> (tx, ty) SQL strings, the inverse codec: each char
+    yields one bit of tx (digit & 1) and one of ty (digit >> 1), weighted
+    by its level. zoom >= 1 (see quadkey_oracle_sql)."""
     if zoom < 1:
         raise ValueError("quadkey_decode_oracle_sql requires zoom >= 1")
     txs, tys = [], []
     for i in range(zoom):
-        d = f"CAST(SUBSTRING({qk_expr}, {i + 1}, 1) AS BIGINT)"
+        d = f"CAST(substring({qk_expr}, {i + 1}, 1) AS BIGINT)"
         txs.append(f"(({d} & 1) << {zoom - 1 - i})")
-        tys.append(f"((({d} >> 1)) << {zoom - 1 - i})")
+        tys.append(f"(({d} >> 1) << {zoom - 1 - i})")
     return " + ".join(txs), " + ".join(tys)

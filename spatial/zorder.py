@@ -20,63 +20,39 @@ Serialize.hs) is a codec library with no storage layer; this module is part
 of the engine's scale mandate (SURVEY.md section 2.3: cell-prefix range
 partitioning).
 
-Float-parity policy: quantization is add / divide / multiply / floor in a
-fixed op order, replayed verbatim in the DuckDB oracle -- bit-identical on
+Float-parity policy: the key is one stage list (``zkey_stages``:
+``cells.quantize_sql`` per axis, then ``cells.interleave_sql``); Spark and
+the DuckDB oracle evaluate the same SQL strings, so quantization (subtract
+/ divide / multiply / floor in a fixed op order) is bit-identical on
 integer-derived coordinates.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _quant(coord: Column, lo: float, span: float, n: int) -> Column:
-    """floor((coord - lo) / span * n) clamped to [0, n-1] -- one add, one
-    divide, one multiply, one floor (the oracle replays the same ops)."""
-    q = F.floor((coord - F.lit(lo)) / F.lit(span) * F.lit(float(n)))
-    return F.least(F.greatest(q, F.lit(0)), F.lit(n - 1)).cast("long")
+from .cells import interleave_sql, quantize_sql, render_duckdb, render_spark
 
 
-def zkey_col(lon: Column, lat: Column, level: int = 12) -> Column:
+def zkey_stages(lon: str, lat: str, level: int = 12,
+                out: str = "zkey") -> list:
     """(lon, lat) -> Z-order key: ``level``-bit quantization per axis,
     Morton-interleaved (lon bits in the odd/higher positions, matching
-    cells.morton_encode's (i, j) convention). Pure JVM column math,
-    whole-stage codegen, zero Python."""
+    cells.morton_encode's (i, j) convention). The quantized axes are
+    staged as named columns: the fold references each ``level`` times."""
     n = 1 << level
-    x = _quant(lon, -180.0, 360.0, n)
-    y = _quant(lat, -90.0, 180.0, n)
-    z = F.lit(0).cast("long")
-    for b in range(level):
-        z = (z
-             .bitwiseOR(F.shiftleft(F.shiftright(x, b).bitwiseAND(F.lit(1)),
-                                    2 * b + 1))
-             .bitwiseOR(F.shiftleft(F.shiftright(y, b).bitwiseAND(F.lit(1)),
-                                    2 * b)))
-    return z
+    return [{"__zo_x": quantize_sql(lon, -180.0, 360.0, n),
+             "__zo_y": quantize_sql(lat, -90.0, 180.0, n)},
+            {out: interleave_sql("__zo_x", "__zo_y", level)}]
 
 
-def with_zkey(df: DataFrame, lon_col, lat_col, level: int = 12,
+def with_zkey(df: DataFrame, lon_col: str, lat_col: str, level: int = 12,
               out_col: str = "zkey") -> DataFrame:
-    """df -> df + z-key column, quantized coords staged as named columns
-    (same CollapseProject rationale as cells.with_cell: the Morton fold
-    references each quantized axis ``level`` times)."""
-    lon = F.col(lon_col) if isinstance(lon_col, str) else lon_col
-    lat = F.col(lat_col) if isinstance(lat_col, str) else lat_col
-    n = 1 << level
-    s1 = df.withColumns({
-        "__zo_x": _quant(lon, -180.0, 360.0, n),
-        "__zo_y": _quant(lat, -90.0, 180.0, n),
-    })
-    x, y = F.col("__zo_x"), F.col("__zo_y")
-    z = F.lit(0).cast("long")
-    for b in range(level):
-        z = (z
-             .bitwiseOR(F.shiftleft(F.shiftright(x, b).bitwiseAND(F.lit(1)),
-                                    2 * b + 1))
-             .bitwiseOR(F.shiftleft(F.shiftright(y, b).bitwiseAND(F.lit(1)),
-                                    2 * b)))
-    return s1.withColumn(out_col, z).drop("__zo_x", "__zo_y")
+    """df -> df + z-key column (Spark rendering of ``zkey_stages``; pure
+    JVM column math, whole-stage codegen, zero Python)."""
+    return render_spark(df, zkey_stages(lon_col, lat_col, level, out_col),
+                        [out_col])
 
 
 def write_zordered(df: DataFrame, path: str, lon_col: str, lat_col: str,
@@ -95,19 +71,7 @@ def write_zordered(df: DataFrame, path: str, lon_col: str, lat_col: str,
 
 
 def zkey_oracle_sql(lon_sql: str, lat_sql: str, level: int = 12) -> str:
-    """DuckDB replay of zkey_col: identical quantization op order, the
-    Morton interleave expanded bit-by-bit over BIGINT."""
-    n = 1 << level
-
-    def quant(expr: str, lo: float, span: float) -> str:
-        q = f"FLOOR((({expr}) - ({lo})) / ({span}) * {float(n)})"
-        return f"CAST(LEAST(GREATEST({q}, 0), {n - 1}) AS BIGINT)"
-
-    x = quant(lon_sql, -180.0, 360.0)
-    y = quant(lat_sql, -90.0, 180.0)
-    terms = []
-    for b in range(level):
-        terms.append(f"(((__zx >> {b}) & 1) << {2 * b + 1})")
-        terms.append(f"(((__zy >> {b}) & 1) << {2 * b})")
-    return (f"SELECT *, ({' | '.join(terms)}) AS zkey "
-            f"FROM (SELECT *, {x} AS __zx, {y} AS __zy FROM __zo_in)")
+    """DuckDB rendering of ``zkey_stages`` over a relation ``__zo_in``:
+    its rows plus ``zkey``."""
+    return render_duckdb("__zo_in", zkey_stages(lon_sql, lat_sql, level),
+                         ["zkey"])

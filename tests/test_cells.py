@@ -154,28 +154,30 @@ def test_spark_udfs(spark):
         assert r["cell"] in r["disk"]
 
 
-def test_cell_of_cols_matches_numpy_kernel(spark):
-    """The pure-JVM column pipeline (cell_of_cols) is bit-identical to the
-    NumPy kernel across grid + random points at several levels."""
+def test_with_cell_matches_numpy_kernel(spark):
+    """The pure-JVM staged cell pipeline (with_cell) is bit-identical to
+    the NumPy kernel across grid + random points at several levels.
+    Collected and compared in Python: a filter on the staged column
+    would be pushed below the stages and inline them."""
     from pyspark.sql import functions as F
 
-    from spatial.cells import cell_of_cols, make_cell_of, with_cell
+    from spatial.cells import with_cell
 
     df = spark.range(20000).select(
         ((F.col("id") * 7919 % 36000).cast("double") / 100.0 - 180.0).alias("lon"),
         ((F.col("id") * 104729 % 17000).cast("double") / 100.0 - 85.0).alias("lat"),
     ).union(spark.range(20000).select(
         (F.rand(3) * 360 - 180).alias("lon"), (F.rand(5) * 170 - 85).alias("lat")))
-    for level in (6, 10, 14):
-        bad = df.select(
-            make_cell_of(level)(F.col("lon"), F.col("lat")).alias("a"),
-            cell_of_cols(F.col("lon"), F.col("lat"), level).alias("b"),
-        ).where("a <> b").count()
-        assert bad == 0, (level, bad)
-        staged = with_cell(
-            df.withColumn("a", make_cell_of(level)(F.col("lon"), F.col("lat"))),
-            "lon", "lat", level, "b")
-        assert staged.where("a <> b").count() == 0, level
+    levels = (6, 10, 14, 20)
+    for level in levels:
+        df = with_cell(df, "lon", "lat", level, f"c{level}")
+    rows = df.collect()
+    lon = np.array([r["lon"] for r in rows])
+    lat = np.array([r["lat"] for r in rows])
+    for level in levels:
+        got = np.array([r[f"c{level}"] for r in rows], dtype=np.int64)
+        want = cell_from_lonlat(lon, lat, level).astype(np.int64)
+        assert (got == want).all(), (level, int((got != want).sum()))
 
 
 def test_cover_bbox_batch_equals_scalar():

@@ -12,7 +12,7 @@ from spatial.datapipe.graph import pagerank, synth_edges
 from spatial.datapipe.sketches import cm_estimate, cm_sketch, fixed_histogram
 from spatial.datapipe.skew import salted_agg
 from spatial.datapipe.urls import with_url_parts
-from spatial.geohash import geohash_col, with_geohash
+from spatial.geohash import BASE32, with_geohash
 
 
 # ---------------------------------------------------------------- geohash
@@ -29,25 +29,41 @@ GH_VECTORS = [
 
 @pytest.mark.parametrize("lon,lat,prec,want", GH_VECTORS)
 def test_geohash_public_vectors(spark, lon, lat, prec, want):
-    got = (spark.range(1)
-           .select(geohash_col(F.lit(lon), F.lit(lat), prec).alias("g"))
-           .collect()[0]["g"])
+    df = spark.createDataFrame([(lon, lat)], "lon double, lat double")
+    got = with_geohash(df, "lon", "lat", prec).collect()[0]["geohash"]
     assert got == want
 
 
-def test_with_geohash_matches_expression_form(spark):
-    """The staged-projection form and the single-expression form agree
-    (same math, different plan shapes)."""
-    df = spark.range(200).select(
-        "id",
-        ((F.col("id") * 7.0) % 360.0 - 180.0).alias("lon"),
-        ((F.col("id") * 3.0) % 170.0 - 85.0).alias("lat"))
-    staged = with_geohash(df, "lon", "lat", precision=8)
-    expr = df.select("id", geohash_col(F.col("lon"), F.col("lat"), 8)
-                     .alias("geohash"))
-    a = {r["id"]: r["geohash"] for r in staged.collect()}
-    b = {r["id"]: r["geohash"] for r in expr.collect()}
-    assert a == b
+def _geohash_py(lon, lat, precision):
+    """Textbook geohash: bisect the lon/lat intervals, one bit per step,
+    starting with lon; 5 bits per base-32 char."""
+    lo, hi = [-180.0, -90.0], [180.0, 90.0]
+    bits = []
+    for k in range(5 * precision):
+        axis, v = (0, lon) if k % 2 == 0 else (1, lat)
+        mid = (lo[axis] + hi[axis]) / 2
+        if v >= mid:
+            bits.append(1)
+            lo[axis] = mid
+        else:
+            bits.append(0)
+            hi[axis] = mid
+    return "".join(
+        BASE32[int("".join(map(str, bits[c:c + 5])), 2)]
+        for c in range(0, len(bits), 5))
+
+
+def test_with_geohash_matches_python_reference(spark):
+    """with_geohash against the textbook bisection encoder over a few
+    thousand random points, at an even (8) and an odd (9) bit count."""
+    rng = np.random.default_rng(8)
+    pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(
+        zip(rng.uniform(-180, 180, 3000), rng.uniform(-90, 90, 3000)))]
+    df = spark.createDataFrame(pts, "id long, lon double, lat double")
+    for prec in (8, 9):
+        got = {r["id"]: r["geohash"]
+               for r in with_geohash(df, "lon", "lat", prec).collect()}
+        assert got == {i: _geohash_py(x, y, prec) for i, x, y in pts}, prec
 
 
 def test_geohash_prefix_hierarchy(spark):
@@ -56,8 +72,8 @@ def test_geohash_prefix_hierarchy(spark):
     df = spark.range(100).select(
         ((F.col("id") * 11.0) % 360.0 - 180.0).alias("lon"),
         ((F.col("id") * 5.0) % 170.0 - 85.0).alias("lat"))
-    out = df.select(geohash_col(F.col("lon"), F.col("lat"), 10).alias("g10"),
-                    geohash_col(F.col("lon"), F.col("lat"), 4).alias("g4"))
+    out = with_geohash(with_geohash(df, "lon", "lat", 10, "g10"),
+                       "lon", "lat", 4, "g4")
     for r in out.collect():
         assert r["g10"][:4] == r["g4"]
 
@@ -271,7 +287,7 @@ def test_zorder_key_parity_and_clamp(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from spatial.zorder import with_zkey, zkey_col
+    from spatial.zorder import with_zkey
 
     pts = [(-180.0, -90.0), (179.99, 89.99), (180.0, 90.0), (0.0, 0.0),
            (-181.0, -91.0), (200.0, 95.0), (12.34, -56.78), (-0.01, 0.01)]
@@ -293,11 +309,6 @@ def test_zorder_key_parity_and_clamp(spark):
             z |= ((y >> b) & 1) << (2 * b)
         exp.append(z)
     assert got == exp
-    # expression form agrees with the staged form
-    flat = [r["z"] for r in
-            df.select(zkey_col(F.col("lon"), F.col("lat"), level)
-                      .alias("z")).collect()]
-    assert flat == exp
 
 
 def test_zorder_write_clusters_disjoint_files(spark, tmp_path):

@@ -110,8 +110,8 @@ def test_tile_envelope_roundtrip_containment(spark):
     w, s, e, n = tile_envelope_exprs(z)
     out = {r["i"]: r for r in df.select(
         "i", "lon", "lat",
-        tile_x(F.col("lon"), z).alias("tile_x"),
-        tile_y(F.col("lat"), z).alias("tile_y"))
+        F.expr(tile_x("lon", z)).alias("tile_x"),
+        F.expr(tile_y("lat", z)).alias("tile_y"))
         .select("*", F.expr(w).alias("w"), F.expr(s).alias("s"),
                 F.expr(e).alias("e"), F.expr(n).alias("n")).collect()}
     for i, lon, lat in pts:
@@ -122,15 +122,25 @@ def test_tile_envelope_roundtrip_containment(spark):
         assert r["s"] - 1e-9 <= lat_c <= r["n"] + 1e-9, (i, r)
 
 
+def _bing_quadkey(tx, ty, z):
+    """Bing tile-system reference (TileXYToQuadKey) in plain Python."""
+    digits = []
+    for i in range(z, 0, -1):
+        mask = 1 << (i - 1)
+        digits.append(str((1 if tx & mask else 0) + (2 if ty & mask else 0)))
+    return "".join(digits)
+
+
 def test_quadkey_roundtrip_and_known_vector(spark):
     """Quadkey codec pair: the public Bing example (tile (3,5) at z=3 ->
     '213'), prefix nesting (a tile's z-1 parent key is its key minus the
     last char), and decode(encode(t)) == t for every tile of the z=4
-    grid."""
+    grid; encode equals the Bing reference there and on random and corner
+    tiles at z=23."""
     from spatial.tiles import quadkey_decode_exprs, quadkey_expr
 
     df = spark.createDataFrame([(3, 5)], "tx long, ty long")
-    assert df.select(quadkey_expr(3, F.col("tx"), F.col("ty"))
+    assert df.select(quadkey_expr(3, "tx", "ty")
                      .alias("qk")).collect()[0]["qk"] == "213"
 
     z = 4
@@ -139,13 +149,27 @@ def test_quadkey_roundtrip_and_known_vector(spark):
         "tx long, ty long")
     enc = grid.select(
         "tx", "ty",
-        quadkey_expr(z, F.col("tx"), F.col("ty")).alias("qk"),
-        quadkey_expr(z - 1, F.shiftright(F.col("tx"), 1),
-                     F.shiftright(F.col("ty"), 1)).alias("parent_qk"))
-    dx, dy = quadkey_decode_exprs(z, F.col("qk"))
+        quadkey_expr(z, "tx", "ty").alias("qk"),
+        quadkey_expr(z - 1, "tx >> 1", "ty >> 1").alias("parent_qk"))
+    dx, dy = quadkey_decode_exprs(z, "qk")
     bad = enc.select(
         "tx", "ty", "qk", "parent_qk",
         dx.alias("rx"), dy.alias("ry")).where(
         (F.col("rx") != F.col("tx")) | (F.col("ry") != F.col("ty"))
         | (F.col("parent_qk") != F.substring("qk", 1, z - 1))).count()
     assert bad == 0
+    assert all(r["qk"] == _bing_quadkey(r["tx"], r["ty"], z)
+               for r in enc.collect())
+
+    z, n = 23, 1 << 23
+    rng = np.random.default_rng(7)
+    tiles = [(0, 0), (n - 1, n - 1), (0, n - 1), (n - 1, 0)] + [
+        (int(x), int(y)) for x, y in rng.integers(0, n, (200, 2))]
+    dx, dy = quadkey_decode_exprs(z, "qk")
+    rows = (spark.createDataFrame(tiles, "tx long, ty long")
+            .withColumn("qk", quadkey_expr(z, "tx", "ty"))
+            .select("tx", "ty", "qk", dx.alias("dx"), dy.alias("dy"))
+            .collect())
+    for r in rows:
+        assert r["qk"] == _bing_quadkey(r["tx"], r["ty"], z), r
+        assert (r["dx"], r["dy"]) == (r["tx"], r["ty"]), r
