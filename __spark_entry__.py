@@ -49,11 +49,11 @@ LAT_SQL = "(CAST((event_id*104729) % 17000 AS DOUBLE)/100.0 - 85.0)"
 
 
 def _lon():
-    return (F.col("event_id") * 7919 % 36000).cast("double") / 100.0 - 180.0
+    return F.expr(LON_SQL)
 
 
 def _lat():
-    return (F.col("event_id") * 104729 % 17000).cast("double") / 100.0 - 85.0
+    return F.expr(LAT_SQL)
 
 
 def _events(spark, sf_dir):

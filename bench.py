@@ -39,7 +39,7 @@ def build_spark(cpus: int) -> SparkSession:
         # see spatial/join.py: constraint propagation duplicates staged cell
         # expressions 357x into per-row predicates
         .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", "4g")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.ui.enabled", "false")

@@ -12,6 +12,7 @@ multimodal binary columns with real BMP/PPM decode), and the PostGIS-over-
 JDBC field boundary (spatial.pg) that is the reference's raison d'etre.
 """
 
+from . import _pyworker  # noqa: F401  (first: patches zipimport in workers)
 from .geometry import (  # noqa: F401
     GEOMETRY,
     GEOMETRYCOLLECTION,

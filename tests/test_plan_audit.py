@@ -128,6 +128,41 @@ def test_enrich_pages_crosses_into_python_only_for_extract_text(spark):
     assert len(python_nodes) == 1 and "extract_text" in python_nodes[0], plan
 
 
+def test_worker_tasks_do_not_reread_unchanged_zips(spark):
+    """PySpark calls importlib.invalidate_caches() at the start of every
+    task, which before Python 3.13 re-parses pyspark.zip once per
+    zipimporter. Once a worker has imported spatial (spatial/_pyworker.py),
+    that call re-reads no unchanged archive: the guard stamps the archives
+    the task has just re-read, so even a worker's first task reads none."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def reads(v: pd.Series) -> pd.Series:
+        import importlib
+        import zipimport
+
+        import spatial  # noqa: F401
+
+        n = 0
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            nonlocal n
+            n += 1
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        return pd.Series([n] * len(v))
+
+    rows = spark.range(0, 8, 1, 8).select(reads("id").alias("n")).collect()
+    assert [r.n for r in rows] == [0] * 8
+
+
 def test_embedding_scan_prunes_to_used_columns(spark):
     from spatial.datapipe.similarity import cosine_topk_bruteforce
     import numpy as np
