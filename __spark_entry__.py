@@ -5496,9 +5496,10 @@ def q_cheapest_path(spark, sf_dir):
     total weight from the seed set doc_id % 97 == 0 within 3 hops over
     the weighted link graph (weights 1..9, a double-mix of (src, j)) --
     the weighted twin of q_bfs_hops.  Bellman-Ford DELTA relaxation
-    (only improved rows re-scatter; best set checkpointed per round, the
-    kcore lineage discipline); the oracle replays the UNOPTIMIZED
-    matrix-power form -- two dataflows, provably the same integers."""
+    (only improved rows re-scatter; the (id, dist, improved) state is
+    checkpointed per round by iterate.fixpoint); the oracle replays the
+    UNOPTIMIZED matrix-power form -- two dataflows, provably the same
+    integers."""
     from spatial.datapipe.graph import cheapest_hops_docs
 
     return cheapest_hops_docs(spark, sf_dir)
@@ -5982,8 +5983,8 @@ def q_d8_accum(spark, sf_dir):
     once, at its flow distance; the full accumulation is this fixpoint
     -- bounded rounds keep the oracle a finite CTE chain, the
     bfs/cheapest-path discipline).  Per round one (x,y)-keyed equi-join
-    + one combinable sum, accumulator checkpointed (the kcore lineage
-    discipline); flow off the interior drops.  All exact BIGINTs."""
+    + one combinable sum, accumulator checkpointed per round by
+    iterate.fixpoint; flow off the interior drops.  All exact BIGINTs."""
     from spatial.raster import d8_accumulation, d8_flow_dir
 
     return d8_accumulation(d8_flow_dir(_raster_grid(spark, sf_dir)))

@@ -36,8 +36,8 @@ Design (and why it is exact):
 
 100 TB shape: the corpus is touched exactly twice (one explode+count at
 train time, one explode+join at encode time); the training loop itself
-iterates over the vocabulary summary (checkpointed per round -- the
-kcore lineage discipline) and moves ONE row per round to the driver (the
+iterates over the vocabulary summary (checkpointed per round with
+``iterate.checkpoint``) and moves ONE row per round to the driver (the
 argmax merge; the bounded-scalar-action precedent of kmeans centroids).
 The encode join broadcasts the vocabulary when it fits, else shuffles on
 the word key -- either way documents never fan out beyond their own
@@ -52,6 +52,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..iterate import checkpoint
 
 BPE_MERGES = 6          # learned merge rounds (oracle chain stays readable)
 
@@ -109,9 +111,9 @@ def train_merges(words: DataFrame, n_merges: int = BPE_MERGES
     no pair remains.  Per round: one explode + combinable SUM over the
     vocabulary summary, a 1-row argmax to the driver, one ``replace``
     rewrite; the word table is checkpointed per round (lineage grows by
-    one replace per round otherwise)."""
-    from .cluster import _local_checkpoint_flat_stats
-
+    one replace per round otherwise).  Each round's rewrite depends on
+    the merge the driver picked, so the loop calls ``iterate.checkpoint``
+    itself instead of running through ``iterate.fixpoint``."""
     merges: list[tuple[int, str, str, int]] = []
     w = words
     for rank in range(1, int(n_merges) + 1):
@@ -127,7 +129,7 @@ def train_merges(words: DataFrame, n_merges: int = BPE_MERGES
         pair, weight = best[0]["pair"], best[0]["weight"]
         merged = pair.replace("><", "")
         merges.append((rank, pair, merged, weight))
-        w = _local_checkpoint_flat_stats(
+        w = checkpoint(
             w.withColumn("sym", F.replace(F.col("sym"), F.lit(pair),
                                           F.lit(merged))))
     return merges

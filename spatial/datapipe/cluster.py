@@ -20,13 +20,12 @@ Components in Map-Reduce in Logarithmic Rounds").
 100 TB shape:
 * Only (id, label) longs shuffle -- never document payloads.
 * Each round is two shuffles (neighbor-min groupBy + pointer-jump join)
-  plus ONE scalar action (the convergence count); lineage is truncated
-  every round with localCheckpoint so the plan does not grow with rounds.
+  plus ONE scalar action (the convergence count); the loop is
+  :func:`spatial.iterate.fixpoint`, which checkpoints every round so the
+  plan does not grow with rounds.
 * Dup graphs from LSH are degree-bounded upstream (the bucket-size guard in
   dedup.py caps candidate fan-out), so no per-node hotspot; components are
   near-cliques with tiny diameter in practice (2-3 rounds end-to-end).
-* On a real cluster prefer spark.sparkContext.setCheckpointDir + checkpoint
-  over localCheckpoint if executor loss during the loop must be survivable.
 
 Reference scope note: haskell-postgis is a geometry codec library
 (src/Database/Postgis/*.hs) with no dedup surface; this operator is part
@@ -38,31 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _local_checkpoint_flat_stats(df: DataFrame) -> DataFrame:
-    """localCheckpoint + STATISTICS RESET -- required for iterative loops.
-
-    Dataset.localCheckpoint snapshots the optimized plan's sizeInBytes
-    into the LogicalRDD it returns. In a loop, the next round's join
-    estimates MULTIPLY that snapshot, the following checkpoint snapshots
-    the product, and the estimate grows doubly-exponentially: measured on
-    a 64-node path graph, the BigInt doubled its digit count every round
-    (13 -> 9.2 MILLION digits by round 19), at which point plan-JSON
-    consumers die on Jackson's number-length cap ("BigInteger would
-    overflow supported range") -- first hit in round 4 by DBSCAN's giant
-    supercritical component, whose ~10 pointer-jump rounds exceed the 2-3
-    the near-clique dedup graphs ever needed. Rewrapping the checkpointed
-    rows via the JVM-side createDataFrame(RDD[Row], schema) drops the
-    snapshot so every round restarts from the default size estimate
-    (constant digits, measured 44 forever); rows stay in the JVM -- no
-    Python serialization enters the loop."""
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _ConcreteDF
-    except ImportError:  # pyspark < 4: pyspark.sql.DataFrame is concrete
-        _ConcreteDF = DataFrame
-    jdf = df.localCheckpoint(True)._jdf
-    fresh = jdf.sparkSession().createDataFrame(jdf.rdd(), jdf.schema())
-    return _ConcreteDF(fresh, df.sparkSession)
+from ..iterate import checkpoint, fixpoint, persisted
 
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
@@ -73,38 +48,38 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     convergence is O(log diameter) and the loop exits on the first round
     with zero label changes."""
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    edges = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))) \
-             .where(F.col("u") != F.col("v")).distinct() \
-             .persist()
-    labels = edges.select("u").distinct() \
-                  .select(F.col("u").alias("id"), F.col("u").alias("label"))
-    labels = _local_checkpoint_flat_stats(labels)
-    for _ in range(max_rounds):
-        # neighbor-min: tightest label visible across one hop
-        nbr = (
-            edges.join(labels.select(F.col("id").alias("v"),
-                                     F.col("label").alias("vl")), "v")
-            .groupBy("u").agg(F.min("vl").alias("nl"))
-            .select(F.col("u").alias("id"), "nl")
-        )
-        prop = (
-            labels.join(nbr, "id", "left")
-            .select("id", F.least("label", "nl").alias("label"),
-                    F.col("label").alias("old"))
-        )
-        # pointer jump: label(u) <- label(label(u))
-        jump = prop.select(F.col("id").alias("jid"),
-                           F.col("label").alias("jl"))
-        new = (
-            prop.join(jump, prop["label"] == jump["jid"], "left")
-            .select("id", F.least("label", "jl").alias("label"), "old")
-        )
-        new = _local_checkpoint_flat_stats(new)
-        changed = new.where(F.col("label") < F.col("old")).count()
-        labels = new.select("id", "label")
-        if changed == 0:
-            break
-    edges.unpersist()
+    with persisted(
+            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .where(F.col("u") != F.col("v")).distinct()) as edges:
+
+        def step(state: DataFrame) -> DataFrame:
+            labels = state.select("id", "label")
+            # neighbor-min: tightest label visible across one hop
+            nbr = (
+                edges.join(labels.select(F.col("id").alias("v"),
+                                         F.col("label").alias("vl")), "v")
+                .groupBy("u").agg(F.min("vl").alias("nl"))
+                .select(F.col("u").alias("id"), "nl")
+            )
+            prop = (
+                labels.join(nbr, "id", "left")
+                .select("id", F.least("label", "nl").alias("label"),
+                        F.col("label").alias("old"))
+            )
+            # pointer jump: label(u) <- label(label(u))
+            jump = prop.select(F.col("id").alias("jid"),
+                               F.col("label").alias("jl"))
+            return (
+                prop.join(jump, prop["label"] == jump["jid"], "left")
+                .select("id", F.least("label", "jl").alias("label"), "old")
+            )
+
+        labels = checkpoint(
+            edges.select("u").distinct()
+            .select(F.col("u").alias("id"), F.col("u").alias("label")))
+        labels = fixpoint(
+            labels, step, max_rounds,
+            done=lambda s: s.where(F.col("label") < F.col("old")).count() == 0)
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

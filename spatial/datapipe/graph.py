@@ -29,8 +29,8 @@ construction + 3 iterations -- is a closed-form SQL replay.
 
 100 TB shape: ranks and edges shuffle as bare longs/doubles (payloads
 never enter the loop); the gather is a map-side-combinable sum keyed by
-destination; lineage is truncated with ``localCheckpoint`` each round so
-the plan stays O(1) across iterations (the cluster.py discipline).  On a
+destination; the loop is :func:`spatial.iterate.fixpoint`, which
+checkpoints every round so the plan stays O(1) across iterations.  On a
 real cluster, co-partitioning edges and ranks by the join key makes the
 scatter shuffle-free after round one (edges are loop-invariant and cached;
 ranks arrive already hash-partitioned by the previous gather).
@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..iterate import fixpoint, persisted
 from .curation import mix_hash, mix_hash_sql
 
 DAMP_NUM, DAMP_DEN = 3, 4          # damping 3/4: dyadic-exact
@@ -73,35 +74,38 @@ def synth_edges(nodes: DataFrame, id_col: str = "doc_id",
     )
 
 
-def pagerank(nodes: DataFrame, edges: DataFrame, id_col: str = "doc_id",
-             iterations: int = 3, checkpoint: bool = True) -> DataFrame:
-    """Fixed-iteration PageRank; returns (id_col, pagerank).  Dangling
-    nodes (no out-edges) simply leak mass, as in the classic formulation;
-    the synthesized graph has none (every node has outdeg >= 2)."""
+def _rank_walk(nodes: DataFrame, edges: DataFrame, id_col: str,
+               start, teleport, iterations: int) -> DataFrame:
+    """(id, r) after ``iterations`` damped rounds from r = ``start``:
+    r'(v) = teleport(v) + 3/4 * sum of r(u) / outdeg(u) over edges (u, v).
+    ``start`` and ``teleport`` are Columns over ``id``."""
     ids = nodes.select(F.col(id_col).alias("id"))
-    ranks = ids.withColumn("r", F.lit(1.0))
     e = edges.select(F.col("src").alias("id"), "dst", "outdeg")
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         gathered = (
             e.join(ranks, "id")
             .select("dst", (F.col("r") / F.col("outdeg")).alias("c"))
             .groupBy("dst").agg(F.sum("c").alias("s"))
         )
-        ranks = (
+        return (
             ids.join(gathered, ids["id"] == gathered["dst"], "left")
             .select(ids["id"],
-                    (F.lit(_TELEPORT)
+                    (teleport
                      + F.lit(float(DAMP_NUM) / DAMP_DEN)
                      * F.coalesce(F.col("s"), F.lit(0.0))).alias("r"))
         )
-        if checkpoint:
-            # stats-reset checkpoint: the plain localCheckpoint snapshots
-            # sizeInBytes and the next round's join estimates multiply it
-            # -- doubly-exponential growth that breaks past ~10 rounds
-            # (full derivation at cluster._local_checkpoint_flat_stats)
-            from .cluster import _local_checkpoint_flat_stats
 
-            ranks = _local_checkpoint_flat_stats(ranks)
+    return fixpoint(ids.withColumn("r", start), step, iterations)
+
+
+def pagerank(nodes: DataFrame, edges: DataFrame, id_col: str = "doc_id",
+             iterations: int = 3) -> DataFrame:
+    """Fixed-iteration PageRank; returns (id_col, pagerank).  Dangling
+    nodes (no out-edges) simply leak mass, as in the classic formulation;
+    the synthesized graph has none (every node has outdeg >= 2)."""
+    ranks = _rank_walk(nodes, edges, id_col, F.lit(1.0), F.lit(_TELEPORT),
+                       iterations)
     return ranks.select(F.col("id").alias(id_col),
                         F.col("r").alias("pagerank"))
 
@@ -225,8 +229,7 @@ HITS_ITERATIONS = 2
 
 
 def hits(nodes: DataFrame, edges: DataFrame, id_col: str = "doc_id",
-         iterations: int = HITS_ITERATIONS, checkpoint: bool = True
-         ) -> DataFrame:
+         iterations: int = HITS_ITERATIONS) -> DataFrame:
     """Kleinberg HITS over the directed link graph, UNNORMALIZED so every
     score is an integer (a count of alternating in/out paths) and the
     oracle is BIGINT-exact -- the textbook per-round L2 normalization only
@@ -244,31 +247,25 @@ def hits(nodes: DataFrame, edges: DataFrame, id_col: str = "doc_id",
     100 TB shape: identical to :func:`pagerank` -- the loop shuffles only
     (node_id, BIGINT) pairs, gathers are map-side-combinable sums, edges
     are loop-invariant (cache / co-partition them by the join key on a
-    real cluster), lineage truncated per round."""
+    real cluster), and the authority vector is the loop state:
+    a_k = authority(hub(a_{k-1})), checkpointed per round."""
     if iterations < 1:
         raise ValueError(f"hits requires iterations >= 1, got {iterations}")
     e = edges.select("src", "dst")
-    h = nodes.select(F.col(id_col).alias("id"),
-                     F.lit(1).cast("bigint").alias("h"))
-    a = None
-    for k in range(iterations):
-        a = (e.join(h, e["src"] == h["id"])
-             .groupBy("dst").agg(F.sum("h").alias("a")))
-        if checkpoint:
-            from .cluster import _local_checkpoint_flat_stats
 
-            if k == iterations - 1:
-                # the final a feeds BOTH the last h and the output's
-                # authority column: checkpoint it so the output join does
-                # not re-execute the whole gather at collect time
-                a = _local_checkpoint_flat_stats(a)
-        h = (e.join(a, "dst")
-             .groupBy("src").agg(F.sum("a").alias("h"))
-             .select(F.col("src").alias("id"), "h"))
-        if checkpoint:
-            from .cluster import _local_checkpoint_flat_stats
+    def authority(h: DataFrame) -> DataFrame:
+        return (e.join(h, e["src"] == h["id"])
+                .groupBy("dst").agg(F.sum("h").alias("a")))
 
-            h = _local_checkpoint_flat_stats(h)
+    def hub(a: DataFrame) -> DataFrame:
+        return (e.join(a, "dst")
+                .groupBy("src").agg(F.sum("a").alias("h"))
+                .select(F.col("src").alias("id"), "h"))
+
+    h0 = nodes.select(F.col(id_col).alias("id"),
+                      F.lit(1).cast("bigint").alias("h"))
+    a = fixpoint(authority(h0), lambda a: authority(hub(a)), iterations - 1)
+    h = hub(a)
     ids = nodes.select(F.col(id_col).alias("id"))
     return (
         ids.join(h, "id", "left")
@@ -717,30 +714,32 @@ def kcore(edges: DataFrame, id_col: str = "doc_id", k: int = KCORE_K,
     vs survivor set -- bare longs) + one map-side-combinable count; the
     edge set is loop-invariant (persisted once -- it feeds BOTH
     semi-joins of every round) and the survivor set only shrinks, so
-    per-round shuffle bytes are bounded by round one's.  The survivor
-    set is checkpointed per round (the pagerank/cluster.py lineage
-    discipline): it is consumed TWICE per round, so an uncheckpointed
-    plan doubles every round -- 2^rounds copies of round one by the end
-    (measured 19 s -> 8 s at 100k nodes for rounds=4).  No all-pairs,
-    no driver state."""
-    from .cluster import _local_checkpoint_flat_stats
+    per-round shuffle bytes are bounded by round one's.  The (id, deg)
+    state is checkpointed per round by :func:`spatial.iterate.fixpoint`:
+    it is consumed TWICE per round, so an uncheckpointed plan doubles
+    every round -- 2^rounds copies of round one by the end (measured
+    19 s -> 8 s at 100k nodes for rounds=4).  No all-pairs, no driver
+    state."""
+    if rounds < 1:
+        raise ValueError(f"kcore requires rounds >= 1, got {rounds}")
+    def degrees(alive: DataFrame) -> DataFrame:
+        return (alive.select(F.explode(F.array("a", "b")).alias("id"))
+                .groupBy("id").agg(F.count("*").alias("deg")))
 
-    u = (edges.select(F.least("src", "dst").alias("a"),
-                      F.greatest("src", "dst").alias("b"))
-         .where(F.col("a") != F.col("b")).distinct().persist())
-    surv = (u.select(F.col("a").alias("id"))
-            .unionByName(u.select(F.col("b").alias("id"))).distinct())
-    deg = None
-    for _ in range(int(rounds)):
-        # every round's survivor set feeds two semi-joins: truncate its
-        # lineage before the double consumption (eager, bare longs)
-        surv = _local_checkpoint_flat_stats(surv)
-        alive = (u.join(surv.select(F.col("id").alias("a")), "a", "semi")
-                 .join(surv.select(F.col("id").alias("b")), "b", "semi"))
-        deg = (alive.select(F.explode(F.array("a", "b")).alias("id"))
-               .groupBy("id").agg(F.count("*").alias("deg")))
-        surv = deg.where(F.col("deg") >= k).select("id")
-    return (deg.where(F.col("deg") >= k)
+    with persisted(edges.select(F.least("src", "dst").alias("a"),
+                                F.greatest("src", "dst").alias("b"))
+                   .where(F.col("a") != F.col("b")).distinct()) as u:
+
+        def step(state: DataFrame) -> DataFrame:
+            surv = state.where(F.col("deg") >= k).select("id")
+            return degrees(
+                u.join(surv.select(F.col("id").alias("a")), "a", "semi")
+                .join(surv.select(F.col("id").alias("b")), "b", "semi"))
+
+        # round one peels against every node, so its degrees are the full
+        # degrees; the later rounds run through the checkpointed loop
+        state = fixpoint(degrees(u), step, int(rounds) - 1)
+    return (state.where(F.col("deg") >= k)
             .select(F.col("id").alias(id_col),
                     F.col("deg").cast("bigint").alias("deg")))
 
@@ -919,28 +918,31 @@ def label_prop(edges: DataFrame, id_col: str = "doc_id",
     edge set against the (id, label) longs and ONE combinable count --
     bare-long shuffles bounded by the edge count, labels never fan out
     past the adjacency.  Edges are loop-invariant (persisted once);
-    labels are consumed once per round, so lineage grows linearly and
-    needs no checkpoint at constant ``rounds`` (contrast kcore, whose
-    survivor set feeds two joins per round).  Output: (id_col, label)."""
+    the labeling is checkpointed per round by
+    :func:`spatial.iterate.fixpoint`, so each round's plan starts from
+    the previous round's rows.  Output: (id_col, label)."""
     u = (edges.select(F.least("src", "dst").alias("a"),
                       F.greatest("src", "dst").alias("b"))
          .where(F.col("a") != F.col("b")).distinct())
-    nbr = (u.select(F.col("a").alias("id"), F.col("b").alias("nb"))
-           .unionByName(u.select(F.col("b").alias("id"),
-                                 F.col("a").alias("nb")))
-           .persist())
-    labels = (nbr.select("id").distinct()
-              .select("id", F.col("id").alias("label")))
-    for _ in range(int(rounds)):
-        gathered = (nbr.join(labels.select(F.col("id").alias("nb"),
-                                           "label"), "nb")
-                    .groupBy("id", "label").agg(F.count("*").alias("cnt")))
-        labels = (gathered
-                  .groupBy("id")
-                  .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
-                                      F.col("label").alias("lb")))
-                       .alias("m"))
-                  .select("id", F.col("m.lb").alias("label")))
+    with persisted(u.select(F.col("a").alias("id"), F.col("b").alias("nb"))
+                   .unionByName(u.select(F.col("b").alias("id"),
+                                         F.col("a").alias("nb")))) as nbr:
+
+        def step(labels: DataFrame) -> DataFrame:
+            gathered = (nbr.join(labels.select(F.col("id").alias("nb"),
+                                               "label"), "nb")
+                        .groupBy("id", "label")
+                        .agg(F.count("*").alias("cnt")))
+            return (gathered
+                    .groupBy("id")
+                    .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
+                                        F.col("label").alias("lb")))
+                         .alias("m"))
+                    .select("id", F.col("m.lb").alias("label")))
+
+        labels = fixpoint(nbr.select("id").distinct()
+                          .select("id", F.col("id").alias("label")),
+                          step, rounds)
     return labels.select(F.col("id").alias(id_col),
                          F.col("label").cast("bigint").alias("label"))
 
@@ -1027,32 +1029,33 @@ def cheapest_hops(edges: DataFrame, seeds: DataFrame, id_col: str = "doc_id",
 
     100 TB shape: per round one id-keyed equi-join (frontier x edges,
     bare longs) + two map-side-combinable MINs; edges loop-invariant
-    (persisted); ``best`` is consumed twice per round (merge + frontier
-    diff), so it is checkpointed per round -- the kcore lineage
-    discipline.  Output: (id_col, dist) for nodes reachable in <= rounds
-    hops."""
-    from .cluster import _local_checkpoint_flat_stats
+    (persisted).  The loop state is (id, dist, improved), checkpointed
+    per round by :func:`spatial.iterate.fixpoint`; the frontier is its
+    ``improved`` rows, so no round re-runs an earlier one.  Output:
+    (id_col, dist) for nodes reachable in <= rounds hops."""
+    with persisted(edges.select("src", "j", "dst").withColumn(
+            "w", _edge_weight(F.col("src"), F.col("j")))) as e:
 
-    e = edges.select("src", "j", "dst").withColumn(
-        "w", _edge_weight(F.col("src"), F.col("j"))).persist()
-    best = seeds.select(F.col(id_col).alias("id"),
-                        F.lit(0).cast("long").alias("dist"))
-    frontier = best
-    for _ in range(int(rounds)):
-        cand = (frontier.join(e, frontier.id == e.src)
-                .groupBy(F.col("dst").alias("cid"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("cdist")))
-        merged = (best.join(cand, best.id == cand.cid, "full_outer")
-                  .select(F.coalesce("id", "cid").alias("id"),
-                          F.col("dist").alias("odist"), F.col("cdist")))
-        # improved = newly reached id, or strictly smaller distance
-        # (Spark least() skips nulls, so the merge handles both outer sides)
-        frontier = (merged.where(F.col("odist").isNull()
-                                 | (F.col("cdist") < F.col("odist")))
-                    .select("id",
-                            F.least("odist", "cdist").alias("dist")))
-        best = _local_checkpoint_flat_stats(
-            merged.select("id", F.least("odist", "cdist").alias("dist")))
+        def step(state: DataFrame) -> DataFrame:
+            frontier = state.where("improved")
+            cand = (frontier.join(e, frontier.id == e.src)
+                    .groupBy(F.col("dst").alias("cid"))
+                    .agg(F.min(F.col("dist") + F.col("w")).alias("cdist")))
+            merged = (state.join(cand, state.id == cand.cid, "full_outer")
+                      .select(F.coalesce("id", "cid").alias("id"),
+                              F.col("dist").alias("odist"), F.col("cdist")))
+            # improved = newly reached id, or strictly smaller distance
+            # (Spark least() skips nulls, so the merge handles both outer
+            # sides)
+            return merged.select(
+                "id", F.least("odist", "cdist").alias("dist"),
+                (F.col("odist").isNull()
+                 | (F.col("cdist") < F.col("odist"))).alias("improved"))
+
+        best = fixpoint(seeds.select(F.col(id_col).alias("id"),
+                                     F.lit(0).cast("long").alias("dist"),
+                                     F.lit(True).alias("improved")),
+                        step, rounds)
     return best.select(F.col("id").alias(id_col),
                        F.col("dist").cast("bigint").alias("dist"))
 
@@ -1201,8 +1204,7 @@ PPR_SEED_MOD = 97
 def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
                           id_col: str = "doc_id",
                           seed_mod: int = PPR_SEED_MOD,
-                          iterations: int = 3,
-                          checkpoint: bool = True) -> DataFrame:
+                          iterations: int = 3) -> DataFrame:
     """Personalized PageRank: teleportation lands on the SEED SET (here
     ``id % seed_mod == 0``) instead of uniformly -- the related-pages /
     topic-conditioned authority measure (Haveliwala 2002; the "surf from
@@ -1218,28 +1220,10 @@ def personalized_pagerank(nodes: DataFrame, edges: DataFrame,
     Same 100 TB shape as :func:`pagerank`: (long, double) shuffles,
     map-side-combinable gathers, loop-invariant edges, per-round
     checkpoint."""
-    ids = nodes.select(F.col(id_col).alias("id"))
     seed = F.when(F.col("id") % seed_mod == 0, F.lit(1.0)) \
             .otherwise(F.lit(0.0))
-    ranks = ids.withColumn("r", seed)
-    e = edges.select(F.col("src").alias("id"), "dst", "outdeg")
-    for _ in range(iterations):
-        gathered = (
-            e.join(ranks, "id")
-            .select("dst", (F.col("r") / F.col("outdeg")).alias("c"))
-            .groupBy("dst").agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            ids.join(gathered, ids["id"] == gathered["dst"], "left")
-            .select(ids["id"],
-                    (seed * F.lit(_TELEPORT)
-                     + F.lit(float(DAMP_NUM) / DAMP_DEN)
-                     * F.coalesce(F.col("s"), F.lit(0.0))).alias("r"))
-        )
-        if checkpoint:
-            from .cluster import _local_checkpoint_flat_stats
-
-            ranks = _local_checkpoint_flat_stats(ranks)
+    ranks = _rank_walk(nodes, edges, id_col, seed, seed * F.lit(_TELEPORT),
+                       iterations)
     return ranks.select(F.col("id").alias(id_col), F.col("r").alias("ppr"))
 
 

@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Optional
 
@@ -49,6 +48,7 @@ from pyspark.sql import functions as F
 
 from .ewkb import ewkb_decode
 from .geocode import geocode_page
+from .iterate import persisted
 from .join import SpatialJoinPlan, cluster_by_cell
 from .textextract import extract_text
 from .tiles import tile_assign
@@ -117,17 +117,6 @@ def enrich_pages(pages: DataFrame, zoom: int) -> DataFrame:
     return tile_assign(located, "lon", "lat", zoom)
 
 
-@contextmanager
-def _persisted(df: DataFrame):
-    """Persist ``df`` for the block and release its blocks on exit, also
-    when the block fails."""
-    cached = df.persist()
-    try:
-        yield cached
-    finally:
-        cached.unpersist()
-
-
 def _write(df: DataFrame, out_dir: str, table: str, batch: int) -> None:
     df.write.mode("overwrite").parquet(
         os.path.join(out_dir, table, f"batch={batch}"))
@@ -137,14 +126,14 @@ def _run_batch(plan: SpatialJoinPlan, batch_pages: DataFrame,
                cfg: PipelineConfig, batch: int) -> None:
     """Enrich and join one batch once, write its three sinks from those two
     cached frames, and commit the counts observed on the writes."""
-    with _persisted(enrich_pages(batch_pages, cfg.zoom)
-                    .select(*ENRICHED_COLS)) as enriched:
+    with persisted(enrich_pages(batch_pages, cfg.zoom)
+                   .select(*ENRICHED_COLS)) as enriched:
         joined = plan.join(enriched, x_col="lon", y_col="lat", salt_key="url")
         join_out = joined.select(
             "url", "region_id", "cell", F.col("lon").alias("x"), F.col("lat").alias("y"))
         if cfg.cluster_cells > 0:
             join_out = cluster_by_cell(join_out, "cell", cfg.cluster_cells)
-        with _persisted(join_out) as join_out:
+        with persisted(join_out) as join_out:
             join_obs = Observation(f"join_out-{batch}")
             _write(join_out.observe(join_obs, F.count(F.lit(1)).alias("rows")),
                    cfg.out_dir, "join_out", batch)

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import fixpoint, persisted
 
 
 def focal_slope(grid: DataFrame, x_col: str = "x", y_col: str = "y",
@@ -291,29 +292,32 @@ def d8_accumulation(dirs: DataFrame, x_col: str = "x", y_col: str = "y",
     counted exactly once, at its flow distance.  Flow off the interior
     (into border cells) leaves the domain and drops.
 
-    Per round one (x, y)-keyed equi-join + one combinable sum;
-    accumulator checkpointed per round (the kcore lineage
-    discipline)."""
-    from .datapipe.cluster import _local_checkpoint_flat_stats
-
+    Per round one (x, y)-keyed equi-join + one combinable sum; the
+    accumulator is the :func:`spatial.iterate.fixpoint` state,
+    checkpointed per round."""
     cells = dirs.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"),
                         F.col("dir"))
-    edges = (cells.where(F.col("dir") >= 0)
-             .select(F.col("x").alias("sx"), F.col("y").alias("sy"),
-                     (F.col("x") + F.expr(_D8_DX)).alias("tx"),
-                     (F.col("y") + F.expr(_D8_DY)).alias("ty"))
-             .persist())
-    acc = cells.select("x", "y", F.lit(1).cast("bigint").alias("acc"))
-    for _ in range(int(rounds)):
-        inflow = (edges.join(acc, (edges.sx == acc.x) & (edges.sy == acc.y))
-                  .groupBy(F.col("tx").alias("ix"), F.col("ty").alias("iy"))
-                  .agg(F.sum("acc").alias("s")))
-        acc = (cells.join(inflow, (cells.x == inflow.ix)
-                          & (cells.y == inflow.iy), "left")
-               .select(cells.x, cells.y,
-                       (F.lit(1) + F.coalesce(F.col("s"), F.lit(0)))
-                       .cast("bigint").alias("acc")))
-        acc = _local_checkpoint_flat_stats(acc)
+    with persisted(cells.where(F.col("dir") >= 0)
+                   .select(F.col("x").alias("sx"), F.col("y").alias("sy"),
+                           (F.col("x") + F.expr(_D8_DX)).alias("tx"),
+                           (F.col("y") + F.expr(_D8_DY)).alias("ty"))
+                   ) as edges:
+
+        def step(acc: DataFrame) -> DataFrame:
+            inflow = (edges.join(acc, (edges.sx == acc.x)
+                                 & (edges.sy == acc.y))
+                      .groupBy(F.col("tx").alias("ix"),
+                               F.col("ty").alias("iy"))
+                      .agg(F.sum("acc").alias("s")))
+            return (cells.join(inflow, (cells.x == inflow.ix)
+                               & (cells.y == inflow.iy), "left")
+                    .select(cells.x, cells.y,
+                            (F.lit(1) + F.coalesce(F.col("s"), F.lit(0)))
+                            .cast("bigint").alias("acc")))
+
+        acc = fixpoint(cells.select("x", "y",
+                                    F.lit(1).cast("bigint").alias("acc")),
+                       step, rounds)
     return acc.select(F.col("x").alias(x_col), F.col("y").alias(y_col),
                       "acc")
 

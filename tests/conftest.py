@@ -34,3 +34,28 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def executed_plans(spark):
+    """``run(action)``: call ``action()`` and return ``(description,
+    physical plan description)`` for each SQL execution it started, in
+    order, read from Spark's SQL status store by ``perfbench.checks.PlanLog``."""
+    from perfbench.checks import PlanLog
+
+    log = PlanLog(spark)
+
+    def run(action):
+        last = log.last_id()
+        action()
+        return [(desc, plan) for _, desc, plan in log.since(last)]
+
+    return run
+
+
+def initial_tree(plan: str) -> str:
+    """The operator tree of a physical plan description as planned before
+    any adaptive re-planning: no node details, no runtime statistics, so
+    it depends only on the query's shape."""
+    tree = plan.split("\n\n")[0]
+    return tree.split("\n+- == Initial Plan ==")[-1]

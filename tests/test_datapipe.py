@@ -826,7 +826,7 @@ def test_hits_hand_case(spark):
     e = spark.createDataFrame([(1, 2), (1, 3), (2, 3), (3, 1)],
                               "src long, dst long")
     got = {r["doc_id"]: (r["hub"], r["authority"])
-           for r in hits(nodes, e, iterations=2, checkpoint=False).collect()}
+           for r in hits(nodes, e, iterations=2).collect()}
     assert got == {1: (8, 1), 2: (5, 3), 3: (1, 5)}
 
 
@@ -838,7 +838,7 @@ def test_hits_multiplicity_and_isolated(spark):
     nodes = spark.createDataFrame([(1,), (2,), (9,)], "doc_id long")
     e = spark.createDataFrame([(1, 2), (1, 2)], "src long, dst long")
     got = {r["doc_id"]: (r["hub"], r["authority"])
-           for r in hits(nodes, e, iterations=2, checkpoint=False).collect()}
+           for r in hits(nodes, e, iterations=2).collect()}
     # a1(2) = 2 (two parallel edges), h1(1) = 4, a2(2) = 8, h2(1) = 16
     assert got == {1: (16, 0), 2: (0, 8), 9: (0, 0)}
 
@@ -1048,6 +1048,8 @@ def test_kcore_hand_graph(spark):
     # truncated at rounds=1 the cascade has not reached node 4 yet
     got3 = {r["doc_id"]: r["deg"] for r in kcore(edges, k=2, rounds=1).collect()}
     assert got3 == {0: 3, 1: 3, 2: 3, 3: 4, 4: 2}
+    with pytest.raises(ValueError):
+        kcore(edges, k=2, rounds=0)
 
 
 def test_anchor_terms_pure_python_replay(spark):

@@ -7,11 +7,22 @@ just eyeballed once."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import initial_tree
+
 SF = "/root/testdata/sf0.01"
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _round_plans(executed_plans, action) -> list[str]:
+    """The executed plan of every round an iterative operator ran: each
+    round of spatial.iterate.fixpoint ends in one checkpoint execution."""
+    plans = [p for desc, p in executed_plans(action)
+             if desc.startswith("localCheckpoint")]
+    assert plans, "the operator ran no checkpointed round"
+    return plans
 
 
 def test_column_pruning_reaches_scan(spark):
@@ -388,12 +399,12 @@ def test_line_buffer_and_binary_decode_plans(spark):
     assert "Exchange" not in plan.split("AdaptiveSparkPlan")[-1]
 
 
-def test_session5_graph_and_classifier_plans(spark):
+def test_session5_graph_and_classifier_plans(spark, executed_plans):
     """Session-5 operators stay on the fast path: every one is pure JVM
     (no Python eval anywhere); the hashed classifier has ZERO joins (the
     weight is an inline expression -- the trained-weights variant would
     add exactly one broadcast); HITS' gathers are map-side combinable
-    (partial_sum before the exchange); the walk plan has no
+    (partial_sum before the exchange, in every round); the walk plan has no
     CartesianProduct/BroadcastNestedLoopJoin (each step is an EQUI join
     on (src, j))."""
     from spatial.datapipe.graph import (cocitation_pairs, hits,
@@ -408,9 +419,11 @@ def test_session5_graph_and_classifier_plans(spark):
 
     nodes = spark.range(500).select(F.col("id").alias("doc_id"))
     edges = synth_edges(nodes, n_nodes=500)
-    plan = _plan(hits(nodes, edges, checkpoint=False))
+    plan = _plan(hits(nodes, edges))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "partial_sum" in plan  # gathers combine map-side
+    for plan in _round_plans(executed_plans, lambda: hits(nodes, edges)):
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        assert "partial_sum" in plan  # gathers combine map-side
 
     plan = _plan(random_walks(nodes, edges))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -423,15 +436,15 @@ def test_session5_graph_and_classifier_plans(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_session7_operator_plans(spark):
+def test_session7_operator_plans(spark, executed_plans):
     """Session-7 operators stay on the fast path: the kmeans assignment
     is a broadcast nested loop over the k-row centroid side (the correct
     physical plan for a dim-sized build) with a map-side partial argmin;
     anchor_terms joins edges on an EQUI key (no cartesian) and stays pure
     JVM; the hausdorff pair join broadcasts the vertex dim; kcore's
-    returned plan is constant-depth -- it starts from the checkpointed
-    survivor RDD and the persisted edge cache (the 2^rounds fix), so only
-    the final round's two semi-joins remain."""
+    returned plan starts from the checkpointed (id, deg) state, and every
+    round's plan reads the persisted edge cache and holds only that
+    round's two semi-joins (the 2^rounds fix)."""
     import __spark_entry__ as entry_mod
     from spatial.datapipe.graph import anchor_terms, kcore, synth_edges
 
@@ -453,21 +466,22 @@ def test_session7_operator_plans(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
     plan = _plan(kcore(edges))
-    assert "ExistingRDD" in plan        # survivors enter checkpointed
-    assert "InMemoryTableScan" in plan  # edge set enters from the cache
-    # constant depth: only the LAST round's two semi-joins survive in the
-    # returned plan (earlier rounds live behind the checkpoint boundary)
-    assert plan.count("LeftSemi") == 2
+    assert "ExistingRDD" in plan        # the final state enters checkpointed
+    for plan in _round_plans(executed_plans, lambda: kcore(edges)):
+        assert "InMemoryTableScan" in plan  # edge set enters from the cache
+        # constant depth: each round holds only its own two semi-joins
+        # (earlier rounds live behind the checkpoint boundary)
+        assert initial_tree(plan).count("LeftSemi") == 2
 
 
-def test_session8_operator_plans(spark):
+def test_session8_operator_plans(spark, executed_plans):
     """Session-8 operators stay on the fast path: readability and the
     robots decision are pure-JVM zero-Exchange projections (robots adds
     exactly one BroadcastHashJoin for the per-host rule-array dim -- the
     page side never fans out, so there is no aggregate after the join);
     bbox relate is a broadcast nested loop over the dim-sized box set
     with the classification inline (no Python, no aggregate); label
-    propagation's per-round counts combine map-side; cheapest-path's
+    propagation's counts combine map-side in every round; cheapest-path's
     returned plan is constant-depth (the kcore checkpoint discipline:
     it starts from the checkpointed best-set RDD)."""
     import __spark_entry__ as entry_mod
@@ -493,13 +507,18 @@ def test_session8_operator_plans(spark):
     edges = synth_edges(nodes, n_nodes=500)
     plan = _plan(label_prop(edges))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "partial_count" in plan            # mode counts combine map-side
-    assert "CartesianProduct" not in plan
+    for plan in _round_plans(executed_plans, lambda: label_prop(edges)):
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+        assert "partial_count" in plan        # mode counts combine map-side
+        assert "CartesianProduct" not in plan
 
     seeds = nodes.where(F.col("doc_id") % 97 == 0)
     plan = _plan(cheapest_hops(edges, seeds))
     assert "ExistingRDD" in plan              # best set enters checkpointed
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    for plan in _round_plans(executed_plans,
+                             lambda: cheapest_hops(edges, seeds)):
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_session9_operator_plans(spark):

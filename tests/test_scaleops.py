@@ -498,7 +498,7 @@ def test_session5_graph_ops_partition_invariance(spark):
     n = 300
     nodes = spark.range(n).select(F.col("id").alias("doc_id"))
     edges = synth_edges(nodes, n_nodes=n)
-    for fn in (lambda nd, e: hits(nd, e, checkpoint=False),
+    for fn in (hits,
                random_walks,
                lambda nd, e: cocitation_pairs(e),
                lambda nd, e: assortativity_pieces(e)):
